@@ -25,6 +25,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from data_spark.session import local_frame
+
 TESTDATA_TABLES = (
     "region",
     "nation",
@@ -2077,34 +2079,42 @@ def _bloom_keep_files(
     spark: SparkSession,
     table_path: str,
     manifest: dict,
-    tomb: DataFrame,
+    keys: DataFrame | list[tuple],
     candidate_dirs: set[str] | None = None,
 ) -> dict[str, set[str]] | None:
-    """Membership file pruning for tombstone pre-image recovery: which
-    files of which bloom-covered commits MIGHT contain any tombstoned
-    key. Returns ``{commit_dir: {relative file, ...}}`` for exactly the
-    commits in the manifest's ``bloom.dirs`` (commits without a bloom
-    are absent — read fully), or None when the probe cannot run soundly
-    (no bloom config, hash-convention drift, NULL keys, dtype casts
-    that lose values, or a key set past ``_BLOOM_PROBE_MAX_KEYS``).
+    """Membership file pruning: which files of which bloom-covered
+    commits MIGHT contain any of ``keys`` — a tombstone frame (pre-image
+    recovery) or driver-held literal key tuples in ``bloom.cols`` order
+    (``read_versioned``'s ``where=`` point probe). Returns
+    ``{commit_dir: {relative file, ...}}`` for exactly the commits in
+    the manifest's ``bloom.dirs`` (commits without a bloom are absent —
+    read fully), or None when the probe cannot run soundly (no bloom
+    config, hash-convention drift, NULL keys, dtype casts that lose
+    values, or a key set past ``_BLOOM_PROBE_MAX_KEYS``).
 
     Soundness: blooms have no false negatives under the recorded
-    convention, and the caller's key semi-join is the row-level
-    residual — pruning changes which files OPEN, never which rows
-    match. Probe cost: ONE job over the (tiny) tombstone answers the
-    guards and hands back every distinct key's bit positions (computed
-    by Spark, so build and probe share the hash convention exactly);
-    the keys' (word, mask) requirement lists are assembled driver-side
-    — bounded by the key cap — and broadcast as a local relation
-    against ``files x bits/64`` bloom rows aggregated to one map row
-    per file — O(keys x candidate files) vectorized bit tests with
-    both factors bounded (keys by the cap, files by bounds pruning
-    having already run at stats level on the same manifest)."""
+    convention, and the caller's key semi-join (or ``where`` residual)
+    is the row-level filter — pruning changes which files OPEN, never
+    which rows match. Probe cost, metadata work on the driver:
+
+    1. key positions, computed by Spark so build and probe share the
+       hash convention exactly. Literal keys are deduplicated on the
+       driver and projected over an Arrow-backed local relation the
+       optimizer folds: 0 jobs. A tombstone frame runs ONE aggregate
+       that also answers the guards (at most 2 jobs);
+    2. bloom rows: only the words the keys need, read with pyarrow, one
+       threaded read per candidate ``blooms/<commit>/`` dir — O(files)
+       metadata, the order of the manifest stats every read holds;
+    3. membership: each key's (word, mask) requirements tested against
+       every candidate file's words — O(keys x files) vectorized bit
+       tests with both factors bounded (keys by the cap, files by
+       bounds pruning having already run on the same manifest)."""
     cfg = manifest.get("bloom")
     if not cfg or cfg.get("hash_version") != _BLOOM_HASH_VERSION:
         return None
     cols = cfg["cols"]
-    if not set(cols) <= set(tomb.columns):
+    literal = not isinstance(keys, DataFrame)
+    if not literal and not set(cols) <= set(keys.columns):
         return None
     dirs = [d for d in cfg.get("dirs", []) if d in set(manifest["commits"])]
     if candidate_dirs is not None:
@@ -2116,80 +2126,75 @@ def _bloom_keep_files(
     ]
     if not dirs:
         return None
+    if literal:
+        keys = local_frame(
+            spark,
+            list(dict.fromkeys(keys)),
+            ", ".join(f"{c} {cfg['dtypes'][c]}" for c in cols),
+        )
     bits, k = cfg["bits"], cfg["k"]
-    probe = tomb.select(
+    probe = keys.select(
         *[F.col(c).cast(cfg["dtypes"][c]).alias(c) for c in cols],
         *[F.col(c).isNull().alias(f"__wasnull_{c}") for c in cols],
     )
-    # ONE job over the (tiny) tombstone answers both guards AND yields
-    # each distinct key's bit positions: NULL keys (eqNullSafe can
-    # match stored NULL rows, which set no bits) and value-losing
-    # casts (probe would hash a different value than the build did)
-    # make pruning unsound -> bail; so does a key set past the cap
-    # (limit cap+1 bounds the collect regardless). Grouping keeps
-    # NULL-key groups the old count_distinct ignored, but any such
-    # group is bad and bails, so the outcome is unchanged. Positions
-    # are computed by Spark inside the same job — the hash convention
-    # is never re-implemented in Python.
+    # the guards: NULL keys (eqNullSafe can match stored NULL rows,
+    # which set no bits) and value-losing casts (probe would hash a
+    # different value than the build did) make pruning unsound ->
+    # bail; so does a key set past the cap. A tombstone frame answers
+    # them in the same job that yields each distinct key's positions
+    # (limit cap+1 bounds the collect regardless); grouping keeps
+    # NULL-key groups, and any such group bails.
     bad_row = functools.reduce(
         lambda a, b: a | b,
         [F.col(c).isNull() | F.col(f"__wasnull_{c}") for c in cols],
     )
-    key = F.struct(*[F.col(c) for c in cols])
-    key_rows = (
-        probe.groupBy(*[F.col(c) for c in cols])
-        .agg(F.max(bad_row.cast("int")).alias("__bad"))
-        .select(
-            F.col("__bad"),
-            F.array(*_bloom_positions(key, bits, k)).alias("__pos"),
+    pos = F.array(*_bloom_positions(F.struct(*cols), bits, k)).alias("__pos")
+    if literal:
+        q = probe.select(bad_row.cast("int").alias("__bad"), pos)
+    else:
+        q = (
+            probe.groupBy(*cols)
+            .agg(F.max(bad_row.cast("int")).alias("__bad"))
+            .select("__bad", pos)
+            .limit(_BLOOM_PROBE_MAX_KEYS + 1)
         )
-        .limit(_BLOOM_PROBE_MAX_KEYS + 1)
-        .collect()
-    )
+    key_rows = q.collect()
     if not key_rows or len(key_rows) > _BLOOM_PROBE_MAX_KEYS:
         return None
     # the bad-row check over the limit(cap+1) collected groups is
     # complete: any truncation by the limit implies > cap distinct
-    # keys, which the cap bail above has already taken — so every
-    # surviving group (and hence every bad row) is in key_rows
+    # keys, which the cap bail above has already taken
     if any(r["__bad"] for r in key_rows):
         return None
-    req = spark.createDataFrame(
-        [
-            ([_bloom_word_mask_py(int(p)) for p in r["__pos"]],)
-            for r in key_rows
-        ],
-        "req array<struct<w:int,m:bigint>>",
+    import numpy as np  # noqa: PLC0415
+    import pyarrow.parquet as pq  # noqa: PLC0415
+
+    reqs = [[_bloom_word_mask_py(int(p)) for p in r["__pos"]] for r in key_rows]
+    need = np.array(sorted({w for req in reqs for w, _ in req}), np.int64)
+    req_w = np.searchsorted(need, [[w for w, _ in req] for req in reqs])
+    req_m = np.array([[m for _, m in req] for req in reqs], np.int64)
+    rows = _footer_map(
+        [_commit_bloom_path(table_path, d) for d in dirs],
+        lambda p: pq.read_table(
+            p, columns=["file", "w", "word"], filters=[("w", "in", need.tolist())]
+        ),
     )
-    blooms = (
-        spark.read.parquet(*[_commit_bloom_path(table_path, d) for d in dirs])
-        .withColumn("__p", _strip_file_scheme(F.col("_metadata.file_path")))
-        .withColumn("commit", F.element_at(F.split(F.col("__p"), "/"), -2))
-        .groupBy("commit", "file")
-        .agg(
-            F.map_from_entries(
-                F.collect_list(F.struct(F.col("w"), F.col("word")))
-            ).alias("wm")
+    keep: dict[str, set[str]] = {}
+    for d in dirs:
+        t = rows[_commit_bloom_path(table_path, d)]
+        files, inv = np.unique(
+            t["file"].to_numpy(zero_copy_only=False), return_inverse=True
         )
-    )
-    hits = (
-        blooms.join(F.broadcast(req))
-        .filter(
-            F.forall(
-                "req",
-                lambda r: F.coalesce(
-                    F.element_at(F.col("wm"), r["w"]), F.lit(0)
-                ).bitwiseAND(r["m"])
-                != 0,
-            )
-        )
-        .select("commit", "file")
-        .distinct()
-        .collect()
-    )
-    keep: dict[str, set[str]] = {d: set() for d in dirs}
-    for r in hits:
-        keep.setdefault(r["commit"], set()).add(r["file"])
+        slots = np.searchsorted(need, t["w"].to_numpy())
+        words = t["word"].to_numpy()
+        order = np.argsort(inv, kind="stable")
+        ends = np.cumsum(np.bincount(inv, minlength=len(files)))[:-1]
+        keep[d] = set()
+        for f, at in zip(files, np.split(order, ends)):
+            have = np.zeros(len(need), np.int64)  # missing word == 0
+            have[slots[at]] = words[at]
+            if ((have[req_w] & req_m) != 0).all(axis=1).any():
+                keep[d].add(f)
     return keep
 
 
@@ -2588,7 +2593,9 @@ def merge_versioned(
     closes that regime: a table set up with
     ``write_versioned(bloom_cols=...)`` prunes the pre-image read by
     per-file key-bloom MEMBERSHIP instead (O(files containing the
-    keys) however scattered they are — SCALE_PROBE_r12 ``bloom_cdf``).
+    keys) however scattered they are — SCALE_PROBE_r12 ``bloom_cdf``);
+    that probe is one aggregate over the tombstone (at most 2 jobs),
+    with the needed bloom words read and tested on the driver.
     For scattered-key feeds on a bloomless table, leave this off and
     let consumers reconstruct via batch ``read_changes`` — read-side
     cost is paid per consumer interval, not per commit — or schedule
@@ -3490,7 +3497,10 @@ def read_versioned(
     containing the key) on a scattered table where the min/max
     envelope skips nothing. Sound for the same reason ``where``
     derivation is: the full predicate re-applies as the residual, and
-    blooms have no false negatives under the recorded convention."""
+    blooms have no false negatives under the recorded convention. The
+    probe launches no Spark job: the literal keys' positions fold over
+    a local relation and the needed bloom words are read and tested
+    on the driver (:func:`_bloom_keep_files`)."""
     import json
 
     if where is not None:
@@ -3569,14 +3579,8 @@ def read_versioned(
             )
             if 0 < len(rows) <= 256:
                 try:
-                    probe_df = spark.createDataFrame(
-                        rows,
-                        ", ".join(
-                            f"{c} {bcfg['dtypes'][c]}" for c in bcfg["cols"]
-                        ),
-                    )
                     _keep_files = _bloom_keep_files(
-                        spark, table_path, manifest, probe_df
+                        spark, table_path, manifest, rows
                     )
                 except Exception:
                     # a literal the declared dtype can't represent (or

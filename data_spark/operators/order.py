@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from data_spark.plans.lineage import truncate_lineage
+from data_spark.session import local_frame
 
 
 def global_row_number(
@@ -58,7 +59,7 @@ def global_row_number(
     for row in sorted(per_pid, key=lambda r: r["_pid"]):
         offsets.append((row["_pid"], acc))
         acc += row["count"]
-    off = spark.createDataFrame(offsets, "_pid int, _off bigint")
+    off = local_frame(spark, offsets, "_pid int, _off bigint")
     w = Window.partitionBy("_pid").orderBy(*cols)
     return (
         ranged.withColumn("_prn", F.row_number().over(w))

@@ -21,6 +21,7 @@ from pyspark.sql.types import StructType
 from pyspark.sql.window import Window
 
 from data_spark.operators.merge import delete_then_insert, merge_upsert
+from data_spark.session import local_frame
 
 # Target state rows per streaming-state partition. Stateful operators
 # (stream-stream joins, watermark dedup, windowed aggs) keep one state
@@ -631,8 +632,8 @@ def read_cms_state_estimates(
     for item in items:
         for i, (a, b) in enumerate(CMS_AB):
             probe_rows.append((int(item), i, ((a * int(item) + b) % CMS_P) % CMS_W))
-    probes = spark.createDataFrame(
-        probe_rows, "item bigint, row_id int, col_id bigint"
+    probes = local_frame(
+        spark, probe_rows, "item bigint, row_id int, col_id bigint"
     )
     # the state table is SPARSE (zero cells are absent): probe over the
     # full key x item lattice and read missing cells as 0, else an item

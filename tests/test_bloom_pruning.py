@@ -9,6 +9,8 @@ soundness (null-key bail, keep-set answer-invariance, cast guard).
 from __future__ import annotations
 
 import os
+import random
+import re
 
 import pyspark.sql.functions as F
 
@@ -32,12 +34,14 @@ from data_spark.io import (
 def _scattered_table(spark, tp, n=4000, commits=4, bloom=True):
     """n rows split round-robin across commits, so every commit's [min,
     max] envelope on k spans ~the whole domain — bounds pruning skips
-    nothing for any probe, the shape blooms exist for."""
+    nothing for any probe, the shape blooms exist for. Each commit is
+    pinned to 16 files: a ``spark.range`` layout would follow the
+    session's core count."""
     base = spark.range(0, n).select(
         F.col("id").alias("k"), (F.col("id") % 101).cast("bigint").alias("v")
     )
     write_versioned(
-        base.filter(F.col("k") % commits == 0),
+        base.filter(F.col("k") % commits == 0).repartition(16),
         tp,
         mode="overwrite",
         stats_cols=["k"],
@@ -45,7 +49,7 @@ def _scattered_table(spark, tp, n=4000, commits=4, bloom=True):
     )
     for i in range(1, commits):
         write_versioned(
-            base.filter(F.col("k") % commits == i),
+            base.filter(F.col("k") % commits == i).repartition(16),
             tp,
             mode="append",
             stats_cols=["k"],
@@ -55,6 +59,49 @@ def _scattered_table(spark, tp, n=4000, commits=4, bloom=True):
 
 def _tomb(spark, keys):
     return spark.createDataFrame([(k,) for k in keys], "k bigint")
+
+
+def _pair(path):
+    """(commit dir, file path relative to it) of a data file URI."""
+    commit, rel = re.sub("^file:/+", "/", path).split("/data/", 1)[1].split("/", 1)
+    return commit, rel
+
+
+def _files_holding(spark, tp, keys, cols=("k",)):
+    """Ground truth for the keep-map: every (commit, file) of the head
+    version whose rows hold one of ``keys``, read from
+    ``_metadata.file_path`` rather than from any bloom."""
+    want = {tuple(k) if isinstance(k, tuple) else (k,) for k in keys}
+    commits = _load_manifest(tp, branch_head(tp, "main"))["commits"]
+    rows = (
+        spark.read.parquet(*[os.path.join(tp, "data", c) for c in commits])
+        .select(F.col("_metadata.file_path").alias("p"), *cols)
+        .distinct()
+        .collect()
+    )
+    return {_pair(r["p"]) for r in rows if tuple(r[c] for c in cols) in want}
+
+
+def _kept(keep):
+    return {(c, f) for c, files in keep.items() for f in files}
+
+
+def _jobs_during(spark, fn):
+    """``(fn(), Spark jobs it launched)`` — the max-job-id delta of the
+    status tracker, with the listener bus drained on both sides so a
+    late event from an earlier action is never counted."""
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+    tracker = sc.statusTracker()
+
+    def top():
+        bus.waitUntilEmpty()
+        ids = tracker.getJobIdsForGroup(None)
+        return max(ids) if ids else -1
+
+    before = top()
+    out = fn()
+    return out, top() - before
 
 
 def test_bloom_inherited_across_appends_and_merge(spark, tmp_path):
@@ -90,6 +137,7 @@ def test_scattered_keys_prune_to_containing_files(spark, tmp_path):
     # positives but must never approach the full file count
     assert kept <= 8, (kept, total)
     assert total >= 64  # the scan this probe avoided
+    assert _files_holding(spark, tp, keys) <= _kept(keep)
     # and recovery through the probe is exact: CDF delete pre-images
     v0 = branch_head(tp, "main")
     delete_versioned(_tomb(spark, keys), tp)
@@ -333,6 +381,7 @@ def test_where_equality_point_lookup_uses_bloom(spark, tmp_path):
     total = _data_files(read_versioned(spark, tp))
     assert len(total) >= 64
     assert len(opened) <= 4, (len(opened), len(total))
+    assert _files_holding(spark, tp, [1234]) <= {_pair(p) for p in opened}
     # a key past the domain: zero files opened, empty result, no error
     miss = read_versioned(spark, tp, where="k = 999999")
     assert miss.count() == 0
@@ -449,6 +498,9 @@ def test_where_in_list_membership_probe(spark, tmp_path):
     total = _data_files(read_versioned(spark, tp))
     assert len(total) >= 64
     assert len(opened) <= 9, (len(opened), len(total))
+    assert _files_holding(spark, tp, [15, 1230, 3888]) <= {
+        _pair(p) for p in opened
+    }
     # equality + IN on the same column: the equality (shorter list) wins
     q2 = read_versioned(spark, tp, where="k = 15 AND k IN (15, 1230)")
     assert [r["k"] for r in q2.collect()] == [15]
@@ -501,3 +553,114 @@ def test_word_mask_convention_matches_spark(spark):
     assert len(rows) == 130
     for r in rows:
         assert _bloom_word_mask_py(int(r["pos"])) == (r["w"], r["m"]), r["pos"]
+
+
+def test_keep_map_covers_every_file_holding_a_probed_key(spark, tmp_path):
+    """Seeded hits, misses and IN lists against the ground truth: the
+    tombstone-frame probe, the literal-key probe and the ``where=``
+    read must each keep every file that holds a probed key."""
+    tp = str(tmp_path / "t")
+    _scattered_table(spark, tp)
+    m = _load_manifest(tp, branch_head(tp, "main"))
+    for seed in (3, 11, 29):
+        rng = random.Random(seed)
+        hits = rng.sample(range(4000), 6)
+        misses = [4000 + rng.randrange(10**6) for _ in range(3)]
+        for keys in (hits, misses, hits[:3] + misses):
+            truth = _files_holding(spark, tp, keys)
+            # two hits may share a file; a miss is in none
+            assert bool(truth) == any(k < 4000 for k in keys)
+            for probe in (_tomb(spark, keys), [(k,) for k in keys]):
+                keep = _bloom_keep_files(spark, tp, m, probe)
+                assert keep is not None and truth <= _kept(keep), (seed, keys)
+            q = read_versioned(
+                spark, tp, where=f"k IN ({', '.join(map(str, keys))})"
+            )
+            assert sorted(r["k"] for r in q.collect()) == sorted(
+                k for k in keys if k < 4000
+            )
+            assert truth <= {_pair(p) for p in _data_files(q)}
+
+
+def test_literal_key_probe_launches_no_jobs(spark, tmp_path, monkeypatch):
+    """Literal keys (``=``, ``IN``, compound keys) fold over a local
+    relation and the bloom words are tested on the driver: the probe
+    itself launches no Spark job."""
+    tp = str(tmp_path / "t")
+    _scattered_table(spark, tp, n=400, commits=2)
+    m = _load_manifest(tp, branch_head(tp, "main"))
+    for keys in ([(7,)], [(7,), (102,), (7,), (999999,)]):
+        keep, jobs = _jobs_during(
+            spark, lambda: _bloom_keep_files(spark, tp, m, keys)
+        )
+        assert keep is not None and jobs == 0, (keys, jobs)
+        assert _files_holding(spark, tp, [k for (k,) in keys]) <= _kept(keep)
+    # the where= point reads reach the same literal probe
+    probes = []
+    real = dio._bloom_keep_files
+
+    def counted(*a, **kw):
+        out, jobs = _jobs_during(spark, lambda: real(*a, **kw))
+        probes.append((out is not None, jobs))
+        return out
+
+    monkeypatch.setattr(dio, "_bloom_keep_files", counted)
+    assert read_versioned(spark, tp, where="k = 7").count() == 1
+    assert read_versioned(spark, tp, where="k IN (7, 102, 5000)").count() == 2
+    assert probes == [(True, 0), (True, 0)]
+    monkeypatch.undo()
+    # compound keys hash as one tuple, still without a job
+    tc = str(tmp_path / "c")
+    base = spark.range(0, 600).select(
+        (F.col("id") % 20).alias("a"), (F.col("id") / 20).cast("bigint").alias("b")
+    )
+    write_versioned(
+        base.repartition(8), tc, mode="overwrite", bloom_cols=["a", "b"]
+    )
+    mc = _load_manifest(tc, branch_head(tc, "main"))
+    keys = [(7, 3), (19, 29), (7, 999)]
+    keep, jobs = _jobs_during(
+        spark, lambda: _bloom_keep_files(spark, tc, mc, keys)
+    )
+    assert keep is not None and jobs == 0, jobs
+    assert _files_holding(spark, tc, keys, cols=("a", "b")) <= _kept(keep)
+
+
+def test_tombstone_probe_launches_at_most_two_jobs(spark, tmp_path):
+    """A tombstone frame keeps its one fused guard-and-positions
+    aggregate (its shuffle may add a second job); the bloom rows no
+    longer cost Spark jobs."""
+    tp = str(tmp_path / "t")
+    _scattered_table(spark, tp, n=400, commits=2)
+    m = _load_manifest(tp, branch_head(tp, "main"))
+    tomb = _tomb(spark, [1, 102, 203, 999999])
+    keep, jobs = _jobs_during(spark, lambda: _bloom_keep_files(spark, tp, m, tomb))
+    assert keep is not None and jobs <= 2, jobs
+    assert _files_holding(spark, tp, [1, 102, 203]) <= _kept(keep)
+
+
+def test_keep_map_equals_plain_loop_over_bloom_rows(spark, tmp_path):
+    """The vectorized driver-side membership test against a plain loop
+    over every bloom row: the keep-map is exactly the set of files whose
+    words hold all k bits of some probed key, false positives included."""
+    tp = str(tmp_path / "t")
+    _scattered_table(spark, tp, n=2000, commits=2)
+    m = _load_manifest(tp, branch_head(tp, "main"))
+    cfg = m["bloom"]
+    keys = random.Random(5).sample(range(4000), 40)
+    keep = _bloom_keep_files(spark, tp, m, [(k,) for k in keys])
+    pos = _tomb(spark, keys).select(
+        F.array(*dio._bloom_positions(F.struct("k"), cfg["bits"], cfg["k"]))
+    ).collect()
+    reqs = [[dio._bloom_word_mask_py(int(p)) for p in r[0]] for r in pos]
+    want = {}
+    for c in cfg["dirs"]:
+        rows = spark.read.parquet(os.path.join(tp, "blooms", c)).collect()
+        words = {(r["file"], r["w"]): r["word"] for r in rows}
+        want[c] = {
+            f
+            for f, _ in words
+            if any(all(words.get((f, w), 0) & mask for w, mask in req) for req in reqs)
+        }
+    assert keep == want
+    assert 0 < sum(map(len, want.values())) < sum(len(s) for s in m["stats"].values())

@@ -22,13 +22,17 @@ from __future__ import annotations
 
 import subprocess
 import sys
+from pathlib import Path
 
 import pytest
+
+# the subprocess imports the checkout this test file belongs to
+_REPO_ROOT = repr(str(Path(__file__).resolve().parents[1]))
 
 _SCRIPT = r"""
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, REPO_ROOT)
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
@@ -86,7 +90,12 @@ print(f"OK n={clean.n} h={clean.h}")
 @pytest.mark.slow
 def test_iterative_op_survives_injected_task_failures(tmp_path):
     proc = subprocess.run(
-        [sys.executable, "-c", _SCRIPT, str(tmp_path / "ckpt")],
+        [
+            sys.executable,
+            "-c",
+            _SCRIPT.replace("REPO_ROOT", _REPO_ROOT),
+            str(tmp_path / "ckpt"),
+        ],
         capture_output=True,
         text=True,
         timeout=600,

@@ -6,9 +6,13 @@ from __future__ import annotations
 import pytest
 
 import os
+from pathlib import Path
 
 from data_spark.graph.algorithms import connected_components
 from data_spark.plans.lineage import sized_partitions, truncate_lineage
+
+# the subprocess imports the checkout this test file belongs to
+_REPO_ROOT = repr(str(Path(__file__).resolve().parents[1]))
 
 
 def test_truncate_lineage_local_by_default(spark):
@@ -93,7 +97,7 @@ def test_iterative_query_survives_task_failure():
 
     script = r"""
 import sys
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, REPO_ROOT)
 from pyspark import TaskContext
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
@@ -131,7 +135,7 @@ assert got == clean, "labels diverged after an injected task failure"
 print("RETRY_OK", len(got))
 """
     out = subprocess.run(
-        [sys.executable, "-c", script],
+        [sys.executable, "-c", script.replace("REPO_ROOT", _REPO_ROOT)],
         capture_output=True,
         text=True,
         timeout=600,

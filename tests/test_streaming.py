@@ -8,6 +8,7 @@ import pytest
 
 import json
 import os
+from pathlib import Path
 
 import pyspark.sql.functions as F
 from pyspark.sql.types import (
@@ -22,6 +23,8 @@ from data_spark.streaming import (
     stream_windowed_counts,
 )
 
+# the subprocess imports the checkout this test file belongs to
+_REPO_ROOT = repr(str(Path(__file__).resolve().parents[1]))
 
 def test_incremental_batches_drain_exactly_once(spark, tmp_path):
     src = spark.range(0, 95).select(F.col("id").alias("sub_id"), (F.col("id") * 2).alias("v"))
@@ -1049,7 +1052,7 @@ def test_state_sink_fold_survives_task_failure():
 
     script = r"""
 import shutil, sys, tempfile
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, REPO_ROOT)
 from pyspark import TaskContext
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
@@ -1096,7 +1099,7 @@ assert got == clean, "state diverged after an injected task failure"
 print("SINK_RETRY_OK", len(got))
 """
     out = subprocess.run(
-        [sys.executable, "-c", script],
+        [sys.executable, "-c", script.replace("REPO_ROOT", _REPO_ROOT)],
         capture_output=True,
         text=True,
         timeout=600,

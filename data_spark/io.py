@@ -1297,6 +1297,94 @@ _PART_INFER_CONF = "spark.sql.sources.partitionColumnTypeInference.enabled"
 # pin partition dtypes with explicit schemas.
 _PART_INFER_LOCK = __import__("threading").Lock()
 
+# The footer key under which Spark's parquet writer records the written
+# DataFrame's schema as JSON; non-merging schema inference reads it back
+# from the first data file.
+_SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _first_data_file(path: str) -> str | None:
+    """The file non-merging schema inference reads for ``path``: the
+    path itself, or the first data file of a flat directory in name
+    order, skipping the names Spark's listing ignores (a leading ``_``
+    or ``.``). None where there is no data file, or a subdirectory
+    (partition discovery would add columns)."""
+    if os.path.isfile(path):
+        return path
+    with os.scandir(path) as it:
+        listed = [e for e in it if not e.name.startswith(("_", "."))]
+    if not listed or any(e.is_dir() for e in listed):
+        return None
+    return min(listed, key=lambda e: e.name).path
+
+
+def _footer_spark_schema(paths: list[str]) -> StructType | None:
+    """The data schema a plain ``spark.read.parquet(*paths)`` infers
+    (the reader then marks every field nullable, as it does a given
+    schema), read on the driver from Spark's schema key in the footer
+    of each path's first data file (pyarrow, through
+    :func:`_footer_map`). Inference reads the first file of all paths
+    in path order, which is one of these files, so when every one holds
+    the same key the answer is exactly inference's. None — the caller
+    infers — when a path has no such file or key, the paths disagree,
+    the JSON does not round-trip through pyspark's type model, or the
+    paths number more than the driver footer cap."""
+    if not paths or len(paths) > _FOOTER_DRIVER_MAX_FILES:
+        return None
+    try:
+        import json  # noqa: PLC0415
+
+        import pyarrow.parquet as pq  # noqa: PLC0415
+
+        files = [_first_data_file(p) for p in paths]
+        if None in files:
+            return None
+        found = set(
+            _footer_map(
+                sorted(set(files)),
+                lambda f: (pq.read_metadata(f).metadata or {}).get(
+                    _SPARK_ROW_METADATA
+                ),
+            ).values()
+        )
+        if len(found) != 1 or None in found:
+            return None
+        raw = json.loads(found.pop())
+        schema = StructType.fromJson(raw)
+        return schema if schema.jsonValue() == raw else None
+    except (OSError, ValueError, KeyError, TypeError):
+        # unreadable path or footer (pyarrow raises OSError/ValueError
+        # subclasses), bad JSON, a type pyspark does not model → infer
+        return None
+
+
+def _read_store_parquet(
+    spark: SparkSession,
+    *paths: str,
+    merge_schema: bool = False,
+    base_path: str | None = None,
+) -> DataFrame:
+    """The one reader of versioned-store ``data/``, ``deletes/`` and
+    ``changes/`` paths. A schema-less ``spark.read.parquet`` launches a
+    Spark job to read one footer; here the schema comes from the
+    footers on the driver (:func:`_footer_spark_schema`) and is handed
+    to the reader, so the read plans without a job. ``merge_schema``,
+    a ``base_path`` (hive partition discovery) and any footer the fast
+    path cannot vouch for fall back to plain inference — the result
+    equals inference wherever the fast answer is not provably the
+    same. Each store dir is written by one Spark job, so its files
+    share one schema and the first file speaks for all of them."""
+    fast = not merge_schema and base_path is None
+    schema = _footer_spark_schema(list(paths)) if fast else None
+    r = spark.read
+    if schema is not None:
+        return r.schema(schema).parquet(*paths)
+    if merge_schema:
+        r = r.option("mergeSchema", "true")
+    if base_path is not None:
+        r = r.option("basePath", base_path)
+    return r.parquet(*paths)
+
 
 def _read_spec_commit(
     spark: SparkSession,
@@ -1319,12 +1407,9 @@ def _read_spec_commit(
         old = spark.conf.get(_PART_INFER_CONF)
         spark.conf.set(_PART_INFER_CONF, "false")
         try:
-            r = spark.read
-            if merge_schema:
-                r = r.option("mergeSchema", "true")
-            if base_path is not None:
-                r = r.option("basePath", base_path)
-            df = r.parquet(*paths)
+            df = _read_store_parquet(
+                spark, *paths, merge_schema=merge_schema, base_path=base_path
+            )
         finally:
             spark.conf.set(_PART_INFER_CONF, old)
     for col_name, dtype in spec.items():
@@ -1553,7 +1638,7 @@ def _collect_commit_stats(
     if spec:
         df = _read_spec_commit(spark, [commit_path], spec)
     else:
-        df = spark.read.parquet(commit_path)
+        df = _read_store_parquet(spark, commit_path)
     rows = (
         df.groupBy(F.col("_metadata.file_path").alias("__f"))
         .agg(
@@ -1673,7 +1758,7 @@ def _tombstone_bounds_dir(spark: SparkSession, delete_path: str) -> dict | None:
             ]
             for c, (mn, mx, nulls) in agg.items()
         } or None
-    return _tombstone_bounds(spark.read.parquet(delete_path))
+    return _tombstone_bounds(_read_store_parquet(spark, delete_path))
 
 
 _log = logging.getLogger("data_spark.io")
@@ -1799,8 +1884,10 @@ def _check_append_schema(
     whose column names/types differ from the table's would otherwise
     land silently — the default reader plans from one footer, so the
     divergent commit's new columns vanish and missing ones surface as
-    corruption only much later. One parent footer read (planning-time
-    metadata) buys the check; intentional evolution passes
+    corruption only much later. One parent footer read on the driver
+    (no Spark job; a footer without Spark's schema key, or a
+    partitioned parent, falls back to a schema-inferring read) buys
+    the check; intentional evolution passes
     ``allow_schema_evolution=True`` and reads back with
     ``merge_schema=True``. Enforcement anchors on the NEWEST data
     commit — the table's CURRENT schema — so after an intentional
@@ -1812,9 +1899,10 @@ def _check_append_schema(
     if not parent_commits:
         return
     c0 = parent_commits[-1]
-    parent = df.sparkSession.read.parquet(
-        os.path.join(table_path, "data", c0)
-    ).schema
+    c0_path = os.path.join(table_path, "data", c0)
+    parent = _footer_spark_schema([c0_path])
+    if parent is None:
+        parent = _read_store_parquet(df.sparkSession, c0_path).schema
     want = {f.name: f.dataType.simpleString() for f in parent.fields}
     # a hive-partitioned parent's partition columns read back with
     # INFERRED types; the manifest's spec records the real ones
@@ -1890,7 +1978,7 @@ def _build_commit_bloom(
     if spec:
         df = _read_spec_commit(spark, [commit_path], spec)
     else:
-        df = spark.read.parquet(commit_path)
+        df = _read_store_parquet(spark, commit_path)
     have = {f.name: f.dataType.simpleString() for f in df.schema.fields}
     if any(have.get(c) != dt for c, dt in cfg["dtypes"].items()):
         return False
@@ -1962,7 +2050,7 @@ def _auto_bloom_bits(spark: SparkSession, commit_path: str) -> int:
         n_files += sum(1 for f in fs if f.endswith(".parquet"))
     rows = _footer_row_count(commit_path)
     if rows is None:
-        rows = spark.read.parquet(commit_path).count()
+        rows = _read_store_parquet(spark, commit_path).count()
     per_file = rows / max(n_files, 1)
     bits = _BLOOM_MIN_BITS
     while bits < per_file * 10 and bits < _BLOOM_MAX_BITS:
@@ -2563,7 +2651,11 @@ def merge_versioned(
     purge_deletes). The per-key LWW reduction over the SOURCE is the
     caller's job (cdc_stream_sink does it per micro-batch); a source
     with duplicate keys would insert duplicate rows, exactly like SQL
-    MERGE with a non-deterministic source.
+    MERGE with a non-deterministic source. The tombstone is the
+    source's key projection as is, without a dedup shuffle: every
+    tombstone consumer ignores duplicate keys (anti and semi joins, the
+    bloom probe's key grouping, the recorded bounds' ``nulls == 0``
+    test, the stream source's set probe).
 
     Concurrency: same optimistic protocol as write_versioned — data
     and tombstone dirs are written once under a unique token; on a
@@ -2595,11 +2687,14 @@ def merge_versioned(
     per-file key-bloom MEMBERSHIP instead (O(files containing the
     keys) however scattered they are — SCALE_PROBE_r12 ``bloom_cdf``);
     that probe is one aggregate over the tombstone (at most 2 jobs),
-    with the needed bloom words read and tested on the driver.
-    For scattered-key feeds on a bloomless table, leave this off and
-    let consumers reconstruct via batch ``read_changes`` — read-side
-    cost is paid per consumer interval, not per commit — or schedule
-    ``maintain_versioned`` to keep the scan bounded.
+    with the needed bloom words read and tested on the driver. Every
+    internal read of the commit's own dirs plans from footer schemas
+    read on the driver (:func:`_read_store_parquet`), so none pays a
+    schema-inference job: a 3-row change-feed merge on a bloom table
+    runs 9 jobs. For scattered-key feeds on a bloomless table, leave
+    this off and let consumers reconstruct via batch ``read_changes`` —
+    read-side cost is paid per consumer interval, not per commit — or
+    schedule ``maintain_versioned`` to keep the scan bounded.
 
     Reference parity: upload/main.py's load loop deletes re-sent keys
     then re-inserts (two visible steps on the serving index); this is
@@ -2618,7 +2713,7 @@ def merge_versioned(
     )
 
     def _write_tombstone():
-        source.select(*keys).dropDuplicates().write.mode("overwrite").parquet(
+        source.select(*keys).write.mode("overwrite").parquet(
             os.path.join(table_path, "deletes", delete_dir)
         )
         # bounds from the WRITTEN tombstone (tiny), not the source
@@ -2760,7 +2855,11 @@ def purge_deletes(spark: SparkSession, table_path: str) -> int:
     with NO delete entries; after it, ``vacuum_versions`` can reclaim
     the superseded commit dirs and the tombstones themselves. Readers
     of the purged version and the pre-purge version see identical
-    rows — purging is a layout change, never a data change.
+    rows — purging is a layout change, never a data change. Each
+    covered commit costs one anti-join rewrite; its tombstones are read
+    as written (duplicate keys on an anti join's build side change
+    nothing, so no dedup shuffle) and every scan plans from footer
+    schemas read on the driver.
 
     Concurrency: the rewrite is derived from the parent snapshot, so a
     collision (another writer committed first) invalidates the WHOLE
@@ -2810,10 +2909,10 @@ def purge_deletes(spark: SparkSession, table_path: str) -> int:
             if isinstance(spec_c, dict):
                 df = _read_spec_commit(spark, [cdir], spec_c, base_path=cdir)
             else:
-                df = spark.read.parquet(cdir)
-            tomb = spark.read.parquet(
-                *[os.path.join(table_path, "deletes", d) for d in applicable]
-            ).dropDuplicates()
+                df = _read_store_parquet(spark, cdir)
+            tomb = _read_store_parquet(
+                spark, *[os.path.join(table_path, "deletes", d) for d in applicable]
+            )
             cond = None
             for k in tomb.columns:
                 eq = df[k].eqNullSafe(tomb[k])
@@ -3010,12 +3109,13 @@ def optimize_versioned(
                 if isinstance(spec_c, dict):
                     df = _read_spec_commit(spark, [cdir], spec_c, base_path=cdir)
                 else:
-                    df = spark.read.parquet(cdir)
+                    df = _read_store_parquet(spark, cdir)
                 applicable = [d["dir"] for d in deletes if d["upto"] > i]
                 if applicable:
-                    tomb = spark.read.parquet(
-                        *[os.path.join(table_path, "deletes", d) for d in applicable]
-                    ).dropDuplicates()
+                    tomb = _read_store_parquet(
+                        spark,
+                        *[os.path.join(table_path, "deletes", d) for d in applicable],
+                    )
                     cond = None
                     for k in tomb.columns:
                         eq = df[k].eqNullSafe(tomb[k])
@@ -3441,6 +3541,13 @@ def read_versioned(
     reads every commit's footer at planning time — at 100 TB you opt
     into that only on tables that actually evolved.
 
+    Read cost: every scan plans from the schema in its files' footers,
+    read on the driver (:func:`_read_store_parquet`; a merging read
+    infers), so building the frame launches no Spark job. Tombstones
+    are anti-joined as written, with no dedup: duplicate keys on an
+    anti join's build side cannot change its result, and a dedup would
+    add a shuffle stage per tombstone read.
+
     ``prune=(col, lo, hi)`` — or a LIST of such triples, ANDed: file
     skipping from the manifest's recorded stats
     (``write_versioned(stats_cols=...)``) — commits with bounds for a
@@ -3589,10 +3696,6 @@ def read_versioned(
                     # predicate still filters rows either way
                     _keep_files = None
 
-    reader = spark.read
-    if merge_schema:
-        reader = reader.option("mergeSchema", "true")
-
     stats = manifest.get("stats", {})
     specs = manifest.get("specs", {})
 
@@ -3660,15 +3763,6 @@ def read_versioned(
                 cond = cond & (F.col(col) <= F.lit(hi))
         return df.filter(cond)
 
-    def mk_reader():
-        # DataFrameReader.option mutates the reader in place, so a
-        # basePath set for one spec'd commit must never leak into the
-        # next scan — build a fresh reader per call
-        r = spark.read
-        if merge_schema:
-            r = r.option("mergeSchema", "true")
-        return r
-
     def scan_commits(cs: list[tuple[str, list[str]]]) -> DataFrame | None:
         """One DataFrame over a set of (commit, kept-paths): flat
         commits batch into a single multi-path scan; each spec'd commit
@@ -3681,7 +3775,9 @@ def read_versioned(
         frames = []
         flat = [p for c, ps in cs if c not in specs for p in ps]
         if flat:
-            frames.append(mk_reader().parquet(*flat))
+            frames.append(
+                _read_store_parquet(spark, *flat, merge_schema=merge_schema)
+            )
         for c, ps in cs:
             if c in specs and ps:
                 d = os.path.join(table_path, "data", c)
@@ -3691,7 +3787,9 @@ def read_versioned(
                         spark, ps, spec, base_path=d, merge_schema=merge_schema
                     )
                 else:
-                    fr = mk_reader().option("basePath", d).parquet(*ps)
+                    fr = _read_store_parquet(
+                        spark, *ps, merge_schema=merge_schema, base_path=d
+                    )
                 frames.append(fr)
         if not frames:
             return None
@@ -3702,8 +3800,10 @@ def read_versioned(
 
     deletes = manifest.get("deletes", [])
     if not deletes and prune is None and not specs and _keep_files is None:
-        return reader.parquet(
-            *[os.path.join(table_path, "data", c) for c in manifest["commits"]]
+        return _read_store_parquet(
+            spark,
+            *[os.path.join(table_path, "data", c) for c in manifest["commits"]],
+            merge_schema=merge_schema,
         )
 
     # Merge-on-read: a tombstone applies only to commits that existed
@@ -3776,7 +3876,9 @@ def read_versioned(
             # both ANSI modes, and the coalesce'd raise_error turns
             # that NULL into an explicit error instead of letting the
             # anti-join resurrect deleted rows (ADVICE r10).
-            fr = mk_reader().parquet(*flat_paths).withColumn(
+            fr = _read_store_parquet(
+                spark, *flat_paths, merge_schema=merge_schema
+            ).withColumn(
                 "__cidx",
                 F.coalesce(
                     F.try_element_at(
@@ -3801,9 +3903,9 @@ def read_versioned(
         for p in frames[1:]:
             data = data.unionByName(p, allowMissingColumns=merge_schema)
         tomb_parts = [
-            spark.read.parquet(os.path.join(table_path, "deletes", d["dir"]))
-            .dropDuplicates()
-            .withColumn("__upto", F.lit(d["upto"]))
+            _read_store_parquet(
+                spark, os.path.join(table_path, "deletes", d["dir"])
+            ).withColumn("__upto", F.lit(d["upto"]))
             for d in live_deletes
         ]
         tomb = tomb_parts[0]
@@ -3819,9 +3921,9 @@ def read_versioned(
     for applicable, cs in groups.items():
         df = scan_commits(cs)
         if applicable:
-            tomb = spark.read.parquet(
-                *[os.path.join(table_path, "deletes", d) for d in applicable]
-            ).dropDuplicates()
+            tomb = _read_store_parquet(
+                spark, *[os.path.join(table_path, "deletes", d) for d in applicable]
+            )
             cond = None
             for k in tomb.columns:
                 c = df[k].eqNullSafe(tomb[k])
@@ -4043,15 +4145,15 @@ def _write_change_files(
     work per consumer — and falls back to reconstruction for versions
     committed without change files. Runs inside the optimistic-commit
     retry loop (pre-images depend on the parent), so a lost race
-    recomputes; orphaned dirs are vacuum-swept."""
-    tomb = spark.read.parquet(
-        os.path.join(table_path, "deletes", delete_dir)
-    ).dropDuplicates()
+    recomputes; orphaned dirs are vacuum-swept. The tombstone is read
+    as written: it only feeds the bloom probe's key grouping and the
+    pre-image semi join, neither of which duplicate keys can change."""
+    tomb = _read_store_parquet(spark, os.path.join(table_path, "deletes", delete_dir))
     removed = _tombstone_preimages(spark, table_path, parent_v, tomb, bounds)
     if mode == "delete":
         ch = removed.withColumn("_change_type", F.lit("delete"))
     else:
-        ins = spark.read.parquet(os.path.join(table_path, "data", commit_dir))
+        ins = _read_store_parquet(spark, os.path.join(table_path, "data", commit_dir))
         ch = _classify_merge_changes(removed, ins, keys)
     ch.write.mode("overwrite").parquet(
         os.path.join(table_path, "changes", changes_dir)
@@ -4125,7 +4227,7 @@ def read_changes(
             spec = specs.get(c)
             if isinstance(spec, dict):
                 return _read_spec_commit(spark, [d], spec, base_path=d)
-            return spark.read.parquet(d)
+            return _read_store_parquet(spark, d)
 
         def tag(df: DataFrame, kind: str) -> DataFrame:
             return df.withColumn("_change_type", F.lit(kind)).withColumn(
@@ -4142,17 +4244,17 @@ def read_changes(
                 # the commit wrote its change files (change_feed=True):
                 # serve them directly — zero reconstruction work
                 frames.append(
-                    spark.read.parquet(
-                        os.path.join(table_path, "changes", ch_dir)
+                    _read_store_parquet(
+                        spark, os.path.join(table_path, "changes", ch_dir)
                     ).withColumn("_commit_version", F.lit(v).cast("bigint"))
                 )
                 prev_main = v
                 prev_commits = set(m.get("commits", []))
                 continue
             d_entry = m["deletes"][-1]
-            tomb = spark.read.parquet(
-                os.path.join(table_path, "deletes", d_entry["dir"])
-            ).dropDuplicates()
+            tomb = _read_store_parquet(
+                spark, os.path.join(table_path, "deletes", d_entry["dir"])
+            )
             keys = tomb.columns
             # reconstruct: pre-image scan pruned with the tombstone's
             # key bounds recorded at commit time (null-free keys only —

@@ -29,6 +29,7 @@ from data_spark.io import (
     vacuum_versions,
     write_versioned,
 )
+from data_spark.session import local_frame
 
 
 def _scattered_table(spark, tp, n=4000, commits=4, bloom=True):
@@ -664,3 +665,40 @@ def test_keep_map_equals_plain_loop_over_bloom_rows(spark, tmp_path):
         }
     assert keep == want
     assert 0 < sum(map(len, want.values())) < sum(len(s) for s in m["stats"].values())
+
+
+def test_point_read_with_live_tombstone_job_count(spark, tmp_path):
+    """A bloom point read over a table with one live tombstone: the
+    literal probe launches nothing, the scans plan from footer schemas
+    read on the driver, and the tombstone's anti join needs no dedup
+    shuffle — 2 jobs (5 while each scan inferred its schema and the
+    tombstone was deduplicated)."""
+    tp = str(tmp_path / "t")
+    _scattered_table(spark, tp, n=400, commits=2)
+    delete_versioned(_tomb(spark, [5]), tp)
+    rows, jobs = _jobs_during(
+        spark, lambda: read_versioned(spark, tp, where="k = 7").collect()
+    )
+    assert [r["k"] for r in rows] == [7]
+    assert jobs == 2, jobs
+
+
+def test_change_feed_merge_job_count(spark, tmp_path):
+    """``merge_versioned(change_feed=True)`` with a local-relation
+    source on a bloom table: 9 jobs (15 with a schema-inference job per
+    internal read and a deduplicated tombstone)."""
+    tp = str(tmp_path / "t")
+    _scattered_table(spark, tp, n=400, commits=2)
+    src = local_frame(spark, [(7, 1), (102, 2), (5000, 3)], "k bigint, v bigint")
+    v0 = branch_head(tp, "main")
+    v, jobs = _jobs_during(
+        spark, lambda: merge_versioned(src, tp, keys=["k"], change_feed=True)
+    )
+    assert jobs == 9, jobs
+    got = {(r["k"], r["_change_type"]) for r in read_changes(spark, tp, v0).collect()}
+    assert got == {
+        (7, "update_preimage"), (7, "update_postimage"),
+        (102, "update_preimage"), (102, "update_postimage"),
+        (5000, "insert"),
+    }
+    assert v == v0 + 1

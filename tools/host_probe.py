@@ -1,7 +1,8 @@
 """Host throughput probe: measures delivered parallel CPU (sha256 hashing, GIL-free).
 
-Prints units/s for 1 thread and N threads. ~200+ units/s at 32 threads means a
-quiet window; <100 means external contention (see OPTIMIZATION_r12.md).
+Prints units/s for 1 thread and N threads, N being the engine's core count
+(``SPARK_GRAFT_CPUS``, else the cores this process may run on). Delivered cores
+well below N mean other tenants are using the host (see OPTIMIZATION_r12.md).
 """
 from __future__ import annotations
 
@@ -10,6 +11,10 @@ import os
 import sys
 import time
 from concurrent.futures import ThreadPoolExecutor
+
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from data_spark.session import local_cpus  # noqa: E402
 
 
 def unit() -> None:
@@ -27,7 +32,7 @@ def rate(threads: int, units: int) -> float:
 
 
 if __name__ == "__main__":
-    n = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    n = local_cpus()
     r1 = rate(1, 4)
     rn = rate(n, max(64, 2 * n))
     print(f"single-thread: {r1:.1f} units/s; {n}-thread: {rn:.1f} units/s "

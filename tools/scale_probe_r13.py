@@ -35,7 +35,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from data_spark.session import get_spark  # noqa: E402
+from data_spark.session import get_spark, local_cpus  # noqa: E402
 
 SF_BASE = "/root/testdata/sf0.1"
 
@@ -96,7 +96,7 @@ def incr(sf_dir: str) -> None:
     wall = time.perf_counter() - t0
     print(json.dumps({
         "probe": "incr", "sf_dir": sf_dir,
-        "cpus": os.environ.get("SPARK_GRAFT_CPUS", "32"),
+        "cpus": local_cpus(),
         "wall_s": round(wall, 2),
     }))
 
@@ -170,7 +170,7 @@ def cdf(sf_dir: str, key_hi: int) -> None:
     shutil.rmtree(work, ignore_errors=True)
     print(json.dumps({
         "probe": "cdf", "key_hi": key_hi, "rows_down": n,
-        "cpus": os.environ.get("SPARK_GRAFT_CPUS", "32"),
+        "cpus": local_cpus(),
         "wall_s": round(wall, 2),
     }))
 

@@ -14,14 +14,14 @@ from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
-# HotSpot's Tier-4 (C2) thresholds at 4x the JDK 17 defaults: C2 now takes
-# 20000 calls, or 2400 calls and 60000 calls + loop back-edges, or 160000
+# HotSpot's Tier-4 (C2) thresholds at 3x the JDK 17 defaults: C2 now takes
+# 15000 calls, or 1800 calls and 45000 calls + loop back-edges, or 120000
 # back-edges for an on-stack replacement. Methods still get C1 code after
 # Tier-3's ~200 calls, so only code that stays hot past warm-up pays for a
 # C2 compile.
 DRIVER_JIT_OPTIONS = (
-    "-XX:Tier4InvocationThreshold=20000 -XX:Tier4MinInvocationThreshold=2400 "
-    "-XX:Tier4CompileThreshold=60000 -XX:Tier4BackEdgeThreshold=160000"
+    "-XX:Tier4InvocationThreshold=15000 -XX:Tier4MinInvocationThreshold=1800 "
+    "-XX:Tier4CompileThreshold=45000 -XX:Tier4BackEdgeThreshold=120000"
 )
 
 
@@ -45,7 +45,7 @@ def get_spark(app_name: str = "data_spark", shuffle_partitions: int | None = Non
       - Arrow enabled for the pandas-UDF boundaries (simhash, multimodal).
 
     JIT policy: the driver JVM starts with ``DRIVER_JIT_OPTIONS``,
-    HotSpot's Tier-4 (C2) thresholds at 4x the defaults. A run of this
+    HotSpot's Tier-4 (C2) thresholds at 3x the defaults. A run of this
     engine is many short Spark SQL jobs, store commits and stream drains
     over small data, so most of its CPU is Catalyst planning and codegen
     in Spark's own classes, which HotSpot is still warming up when the run
@@ -55,14 +55,18 @@ def get_spark(app_name: str = "data_spark", shuffle_partitions: int | None = Non
     methods rather than generated classes. Higher C2 thresholds keep C1
     code for methods that are warm for a while and then go cold, and leave
     C2 to loops and methods that stay hot, which long jobs still reach.
-    The setting is a trade: methods waiting for C2 run slower, fully
-    profiled C1 code on the caller's thread. At 4x, runs of a few seconds
-    on a 4-core host used 15-20% less CPU per operation, with
-    per-operation latency within run-to-run spread and session start-up
-    1-4% slower in wall time; at 10x (for calls) they saved 17-23% but a
-    point read's latency rose ~22%. C1 only (``-XX:TieredStopAtLevel=1``)
-    was rejected: it cut CPU too but made ``query_mix`` 57% slower in wall
+    The cost is that a method waiting for C2 runs slower, fully profiled
+    C1 code on the caller's thread, so the multiple is a trade between CPU
+    and warm-up latency. At 3x, on a 4-core host, both benchmark
+    workloads used ~14% less CPU per operation with every latency median
+    and the sf0.1 long-run warm times within run-to-run spread, but the
+    test suite, one JVM running hundreds of distinct short code paths,
+    took ~19% longer (one run each). At 4x session start-up was slower
+    in wall time beyond that spread, and at 10x (for calls) a point
+    read's latency rose ~22%. C1 only (``-XX:TieredStopAtLevel=1``) was
+    rejected: it cut CPU too but made ``query_mix`` 57% slower in wall
     time (13.9 -> 21.8 s a pass), since planning then never gets C2 code.
+    ROADMAP Open item 7 tracks the warm-up latency of this setting.
     """
     cpus = local_cpus()
     if shuffle_partitions is None:

@@ -3,6 +3,9 @@
 Prints units/s for 1 thread and N threads, N being the engine's core count
 (``SPARK_GRAFT_CPUS``, else the cores this process may run on). Delivered cores
 well below N mean other tenants are using the host (see OPTIMIZATION_r12.md).
+Records made before the default followed the CPU affinity (OPTIMIZATION_r12/r13,
+SCALE_PROBE_r13.json, VERDICT.md) ran 32 threads; set ``SPARK_GRAFT_CPUS=32`` to
+compare with them.
 """
 from __future__ import annotations
 
@@ -11,10 +14,6 @@ import os
 import sys
 import time
 from concurrent.futures import ThreadPoolExecutor
-
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-from data_spark.session import local_cpus  # noqa: E402
 
 
 def unit() -> None:
@@ -32,6 +31,11 @@ def rate(threads: int, units: int) -> float:
 
 
 if __name__ == "__main__":
+    # imported here: data_spark.session loads pyspark, which the hashing
+    # itself does not need
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    from data_spark.session import local_cpus
+
     n = local_cpus()
     r1 = rate(1, 4)
     rn = rate(n, max(64, 2 * n))

@@ -293,53 +293,6 @@ def _hash_tokens_for_partitions(spark: SparkSession, n: int) -> list[int]:
     return [by_p[p] for p in range(n)]
 
 
-def write_partitioned(
-    df: DataFrame,
-    path: str,
-    partition_by: list[str],
-    mode: str = "overwrite",
-) -> None:
-    """Hive-style partitioned parquet write (SURVEY §4 partitioning
-    discipline: facts by cycle/file_num, documents by source+date).
-    Reads that filter on ``partition_by`` columns prune directories —
-    verify with plans.report.plan_report()['partition_filters']."""
-    df.write.mode(mode).partitionBy(*partition_by).parquet(path)
-
-
-def read_with_schema_evolution(spark: SparkSession, path: str) -> DataFrame:
-    """Read a parquet dataset whose files were written under EVOLVED
-    schemas (columns added over time): ``mergeSchema`` unions the
-    per-file footers into one schema and back-fills missing columns
-    with NULL. The default read trusts one footer — fast (no
-    footer-merge pass over every file at 100 TB) but silently DROPS
-    late-added columns when the sampled footer predates them; call
-    this reader when the dataset is known to evolve, and keep the
-    default for frozen layouts."""
-    return spark.read.option("mergeSchema", "true").parquet(path)
-
-
-def overwrite_partitions_dynamic(
-    df: DataFrame,
-    path: str,
-    partition_by: list[str],
-) -> None:
-    """Partition-level overwrite (``partitionOverwriteMode=dynamic``):
-    ``mode('overwrite')`` replaces ONLY the hive partitions present in
-    ``df`` and leaves every other partition untouched — the idempotent
-    backfill primitive (re-run one day/source without rewriting the
-    table). Under the default STATIC mode the same call truncates the
-    whole table first; at 100 TB that difference is the job. The conf
-    is set per-write and restored, so a shared session keeps its
-    default."""
-    spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        df.write.mode("overwrite").partitionBy(*partition_by).parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-
-
 def write_bucketed(
     df: DataFrame,
     table: str,
@@ -430,13 +383,13 @@ def _backup_order_key(path: str):
 
 def _recover_table(path: str) -> None:
     """Crash recovery shared by the staged table swaps
-    (:func:`validated_overwrite`, :func:`compact_files`,
-    :func:`optimize_table`): a swap is stage → backup-rename →
-    live-rename, so a crash between the two renames leaves NO directory
-    at ``path`` and the newest backup IS the pre-swap table. Restore it
-    (the caller then redoes one rewrite instead of losing the table),
-    and sweep every other stray staging/backup leftover. Mirrors
-    ``_recover_index`` (ADVICE r6)."""
+    (:func:`validated_overwrite` and the MinHash index's signature-table
+    purge in ``operators.dedup_index``): a swap is stage →
+    backup-rename → live-rename, so a crash between the two renames
+    leaves NO directory at ``path`` and the newest backup IS the
+    pre-swap table. Restore it (the caller then redoes one rewrite
+    instead of losing the table), and sweep every other stray
+    staging/backup leftover (ADVICE r6)."""
     parent, base = os.path.split(os.path.abspath(path))
     prefixes = tuple(
         f"{base}{tag}"
@@ -545,182 +498,13 @@ def swap_partition_dir(part_dir: str, staging: str) -> None:
 
 
 def _swap_table(path: str, staging: str) -> None:
-    """Backup-rename → live-rename swap shared by the table rewriters;
-    ``_recover_table`` undoes a crash between the renames."""
+    """Backup-rename → live-rename swap shared by the staged table
+    rewrites listed at :func:`_recover_table`, which undoes a crash
+    between the renames."""
     backup = f"{path}__bak_{_backup_tag()}"
     if os.path.exists(path):
         os.rename(path, backup)
     os.rename(staging, path)
-    shutil.rmtree(backup, ignore_errors=True)
-
-
-def compact_files(
-    spark: SparkSession,
-    path: str,
-    target_file_bytes: int = 128 << 20,
-) -> dict:
-    """Small-file compaction (the OPTIMIZE / bin-packing maintenance op).
-
-    Incremental sinks accrete small files — every micro-batch commit of
-    the streaming tier and every MERGE rewrite adds a few — and at 100 TB
-    an over-fragmented table taxes every downstream scan with per-file
-    open/footer costs and starves maxPartitionBytes packing. This
-    rewrites the directory into ``ceil(bytes / target_file_bytes)``
-    files.
-
-    Plan shape: the file inventory is a driver-side metadata listing (no
-    Spark job); the rewrite is a read + narrow ``coalesce`` (ZERO
-    shuffle — small inputs are already grouped by
-    ``spark.sql.files.maxPartitionBytes`` at scan time); the swap reuses
-    the staging-dir + count-validate + rename discipline of
-    ``validated_overwrite``, so a failed rewrite leaves the table
-    untouched. Already-compact directories return without rewriting.
-    """
-    _recover_table(path)
-    inventory = []
-    for root, _dirs, names in os.walk(path):
-        for name in names:
-            if name.endswith(".parquet"):
-                inventory.append(os.path.join(root, name))
-    total = sum(os.path.getsize(f) for f in inventory)
-    n_before = len(inventory)
-    n_target = max(1, -(-total // target_file_bytes)) if total else 1
-    stats = {
-        "files_before": n_before,
-        "files_after": n_before,
-        "bytes": total,
-        "rewritten": False,
-    }
-    if n_target >= n_before:
-        return stats
-
-    old_rows = spark.read.parquet(path).count()
-    staging = f"{path}__staging_{uuid.uuid4().hex[:8]}"
-    spark.read.parquet(path).coalesce(n_target).write.mode("overwrite").parquet(staging)
-    new_rows = spark.read.parquet(staging).count()
-    if new_rows != old_rows:
-        shutil.rmtree(staging, ignore_errors=True)
-        raise ValueError(
-            f"compact_files rollback: rewrote {new_rows} rows != {old_rows}"
-        )
-    _swap_table(path, staging)
-    stats["files_after"] = sum(
-        1
-        for root, _dirs, names in os.walk(path)
-        for name in names
-        if name.endswith(".parquet")
-    )
-    stats["rewritten"] = True
-    return stats
-
-
-def build_file_index(
-    spark: SparkSession, path: str, cols: list[str], index_path: str
-) -> None:
-    """Build a file-level min/max manifest over a parquet dataset — the
-    Iceberg/Delta data-skipping idea on plain parquet files. One
-    DISTRIBUTED scan groups by the hidden ``_metadata.file_path``
-    column and records per-file min/max/row-count for ``cols``; the
-    index is a metadata-sized table (one row per FILE), amortized over
-    every subsequent pruned read.
-
-    Parquet footers already give row-group min/max — but the reader
-    still has to OPEN every file to see them. At 100 TB / millions of
-    files, listing + footer reads dominate planning; a manifest scan
-    reads one small parquet table instead."""
-    df = spark.read.parquet(path)
-    aggs = [F.count(F.lit(1)).cast("bigint").alias("n_rows")]
-    for c in cols:
-        aggs.append(F.min(c).alias(f"{c}__min"))
-        aggs.append(F.max(c).alias(f"{c}__max"))
-    (
-        df.select(F.col("_metadata.file_path").alias("file_path"), *cols)
-        .groupBy("file_path")
-        .agg(*aggs)
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(index_path)
-    )
-
-
-def refresh_file_index_for_dirs(
-    spark: SparkSession,
-    path: str,
-    touched_dirs: list[str],
-    cols: list[str],
-    index_path: str,
-) -> None:
-    """O(delta) manifest maintenance: re-derive min/max/rows only for
-    files under ``touched_dirs`` (paths relative to ``path``, e.g. the
-    bucket partitions a MERGE just rewrote), keep every other file's
-    manifest row as-is. ``build_file_index`` rescans the whole table —
-    right for bootstrap, wrong inside an incremental loop where the
-    untouched 99% of a 100 TB table must not be re-read per batch.
-
-    Crash-safe: the swap below can be interrupted between its two
-    renames, leaving no live manifest — so every call first recovers
-    the newest ``__bak`` if the manifest is missing and sweeps stray
-    ``__staging``/``__bak`` leftovers, making a crashed refresh cost
-    one redo of the delta instead of a silent full rebuild (ADVICE r5)."""
-    _recover_index(index_path)
-    if not os.path.exists(index_path):
-        build_file_index(spark, path, cols, index_path)
-        return
-    touched_abs = [os.path.join(os.path.abspath(path), d) for d in touched_dirs]
-    old = spark.read.parquet(index_path)
-    for d in touched_abs:
-        # anchor with the separator: ".../__kb=3" must not also claim
-        # ".../__kb=30"'s manifest rows
-        old = old.filter(~F.col("file_path").contains(d + os.sep))
-    existing_dirs = [d for d in touched_abs if os.path.exists(d)]
-    aggs = [F.count(F.lit(1)).cast("bigint").alias("n_rows")]
-    for c in cols:
-        aggs.append(F.min(c).alias(f"{c}__min"))
-        aggs.append(F.max(c).alias(f"{c}__max"))
-    parts = [old]
-    if existing_dirs:
-        fresh = (
-            spark.read.option("basePath", path)
-            .parquet(*existing_dirs)
-            .select(F.col("_metadata.file_path").alias("file_path"), *cols)
-            .groupBy("file_path")
-            .agg(*aggs)
-        )
-        parts.append(fresh)
-    merged = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
-    _swap_index(merged, index_path)
-
-
-def _recover_index(index_path: str) -> None:
-    """Shared crash recovery for the file-skipping indexes: if a
-    previous refresh crashed between its two swap renames, the newest
-    ``__bak`` IS the pre-refresh index — restore it so the caller redoes
-    one delta instead of silently falling back to a full rebuild; sweep
-    every other stray ``__staging``/``__bak`` leftover (ADVICE r5)."""
-    parent, base = os.path.split(os.path.abspath(index_path))
-    leftovers = sorted(
-        os.path.join(parent, n)
-        for n in (os.listdir(parent) if os.path.isdir(parent) else [])
-        if n.startswith(f"{base}__bak_") or n.startswith(f"{base}__staging_")
-    )
-    if not os.path.exists(index_path):
-        backups = [p for p in leftovers if f"{base}__bak_" in os.path.basename(p)]
-        if backups:
-            restored = max(backups, key=_backup_order_key)
-            os.rename(restored, index_path)
-            leftovers.remove(restored)
-    for p in leftovers:
-        shutil.rmtree(p, ignore_errors=True)
-
-
-def _swap_index(merged: DataFrame, index_path: str) -> None:
-    """Stage → backup-rename → live-rename swap shared by the index
-    refreshers; _recover_index undoes a crash between the renames."""
-    staging = f"{index_path}__staging_{uuid.uuid4().hex[:8]}"
-    merged.coalesce(1).write.mode("overwrite").parquet(staging)
-    backup = f"{index_path}__bak_{_backup_tag()}"
-    os.rename(index_path, backup)
-    os.rename(staging, index_path)
     shutil.rmtree(backup, ignore_errors=True)
 
 
@@ -731,38 +515,14 @@ def _swap_index(merged: DataFrame, index_path: str) -> None:
 _BLOOM_BITS = 4096
 _BLOOM_K = 5
 # Bit-layout convention of _bloom_positions. Bump on ANY change to the
-# position math: build and probe must agree bit-for-bit, and an index
-# refreshed incrementally across a convention change would mix layouts
-# within one dataset — probes (which require ALL k bits) would silently
-# prune files that contain the value (ADVICE r7). v2 = h2 stride forced
-# into [1, bits-1].
+# position math: build and probe must agree bit-for-bit. A versioned
+# table's manifest records the convention its blooms were built with
+# (_bloom_convention): a probe under another hash version reads unpruned,
+# and a commit under another convention never joins the parent's bloom
+# dirs — mixed layouts would make probes (which require ALL k bits)
+# silently prune files that contain the value (ADVICE r7). v2 = h2
+# stride forced into [1, bits-1].
 _BLOOM_HASH_VERSION = 2
-
-
-def _bloom_meta_path(index_path: str) -> str:
-    # leading underscore: Spark's parquet reader ignores _-prefixed
-    # files, so the sidecar can live inside the index directory and
-    # travel with every copy/rename of it
-    return os.path.join(index_path, "_bloom_meta.json")
-
-
-def _write_bloom_meta(index_path: str, bits: int, k: int) -> None:
-    import json
-
-    tmp = _bloom_meta_path(index_path) + f".{uuid.uuid4().hex[:8]}.tmp"
-    with open(tmp, "w") as f:
-        json.dump({"bits": bits, "k": k, "hash_version": _BLOOM_HASH_VERSION}, f)
-    os.rename(tmp, _bloom_meta_path(index_path))
-
-
-def _read_bloom_meta(index_path: str) -> dict | None:
-    import json
-
-    try:
-        with open(_bloom_meta_path(index_path)) as f:
-            return json.load(f)
-    except (FileNotFoundError, ValueError):
-        return None
 
 
 def _bloom_positions(col: Column, bits: int, k: int) -> list[Column]:
@@ -808,217 +568,6 @@ def _bloom_word_mask_py(p: int) -> tuple[int, int]:
     stay value-identical to :func:`_bloom_word_mask_cols`."""
     m = 1 << (p % 64)
     return p // 64, (m - (1 << 64) if m >= (1 << 63) else m)
-
-
-def refresh_bloom_index_for_dirs(
-    spark: SparkSession,
-    path: str,
-    touched_dirs: list[str],
-    col: str,
-    index_path: str,
-    bits: int = _BLOOM_BITS,
-    k: int = _BLOOM_K,
-) -> None:
-    """O(delta) bloom upkeep, the per-file-immutability twin of
-    :func:`refresh_file_index_for_dirs`: recompute bloom rows only for
-    files under ``touched_dirs``, keep every other file's words as-is.
-    Same crash-safe swap.
-
-    Refusing to mix bit layouts: the index's ``_bloom_meta.json``
-    records the bits/k/hash-convention it was built with; on ANY
-    mismatch with this call (or a missing/pre-metadata index) the
-    whole index is rebuilt instead of merged — an incrementally
-    refreshed index mixing hash conventions silently prunes files that
-    contain the probed value (missed ROWS, not just extra reads)."""
-    _recover_index(index_path)
-    meta = _read_bloom_meta(index_path)
-    stale = meta is None or meta != {
-        "bits": bits,
-        "k": k,
-        "hash_version": _BLOOM_HASH_VERSION,
-    }
-    if not os.path.exists(index_path) or stale:
-        if os.path.exists(index_path):
-            shutil.rmtree(index_path)
-        build_bloom_index(spark, path, col, index_path, bits=bits, k=k)
-        return
-    touched_abs = [os.path.join(os.path.abspath(path), d) for d in touched_dirs]
-    old = spark.read.parquet(index_path)
-    for d in touched_abs:
-        old = old.filter(~F.col("file_path").contains(d + os.sep))
-    existing_dirs = [d for d in touched_abs if os.path.exists(d)]
-    parts = [old]
-    if existing_dirs:
-        df = (
-            spark.read.option("basePath", path)
-            .parquet(*existing_dirs)
-            .select(F.col("_metadata.file_path").alias("file_path"), F.col(col).alias("_v"))
-            .filter(F.col("_v").isNotNull())
-        )
-        pos = df.select(
-            "file_path",
-            F.explode(F.array(*_bloom_positions(F.col("_v"), bits, k))).alias("pos"),
-        )
-        fresh = (
-            pos.select(
-                "file_path",
-                (F.col("pos") / 64).cast("int").alias("w"),
-                F.expr("shiftleft(CAST(1 AS BIGINT), CAST(pos % 64 AS INT))").alias("m"),
-            )
-            .groupBy("file_path", "w")
-            .agg(F.bit_or("m").alias("word"))
-        )
-        parts.append(fresh)
-    merged = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
-    _swap_index(merged, index_path)
-    # the swap replaced the whole directory; restore the convention
-    # sidecar (a crash before this line leaves the meta missing, which
-    # the next refresh treats as "unknown convention" → full rebuild)
-    _write_bloom_meta(index_path, bits, k)
-
-
-def read_index_pruned(
-    spark: SparkSession,
-    path: str,
-    index_path: str,
-    col: str,
-    lo,
-    hi,
-) -> DataFrame:
-    """Manifest-pruned scan: keep only files whose ``[min, max]``
-    envelope for ``col`` overlaps ``[lo, hi]`` (NULL bounds — all-null
-    files — are kept conservatively), then read exactly those files.
-    The file list is planning metadata (one small index scan collected
-    to the driver — file PATHS, never data rows); the data scan never
-    opens a pruned file. The returned frame still carries the residual
-    predicate so results are correct even where envelopes are loose."""
-    idx = spark.read.parquet(index_path)
-    keep = idx.filter(
-        (F.col(f"{col}__max").isNull() | (F.col(f"{col}__max") >= F.lit(lo)))
-        & (F.col(f"{col}__min").isNull() | (F.col(f"{col}__min") <= F.lit(hi)))
-    )
-    files = [r["file_path"] for r in keep.select("file_path").collect()]
-    if not files:
-        # every file pruned: keep the DATA schema via an always-false
-        # filter on the dataset root (a listing, no file reads)
-        return spark.read.parquet(path).filter(F.lit(False))
-    return spark.read.parquet(*files).filter(
-        (F.col(col) >= F.lit(lo)) & (F.col(col) <= F.lit(hi))
-    )
-
-
-def build_bloom_index(
-    spark: SparkSession,
-    path: str,
-    col: str,
-    index_path: str,
-    bits: int = _BLOOM_BITS,
-    k: int = _BLOOM_K,
-) -> None:
-    """Build a per-file BLOOM manifest over ``col`` — data skipping for
-    POINT lookups on columns the layout is NOT clustered by, where the
-    min/max manifest (``build_file_index``) can't prune because every
-    file's envelope spans the whole domain.
-
-    One distributed scan: each value contributes k bit positions
-    (double hashing over xxhash64), folded per (file, 64-bit word) with
-    ``bit_or`` — so the shuffle carries at most
-    ``files × bits/64`` one-long rows, metadata-sized at any table
-    size. Words with no set bits are simply absent (missing row ≡ 0).
-    NULLs set no bits: an equality probe can never match NULL, so
-    all-NULL files prune away entirely.
-
-    Incremental upkeep follows the min/max manifest's pattern
-    (``refresh_file_index_for_dirs``): blooms are per-file and
-    immutable, so a MERGE that rewrites a bucket dir only needs that
-    dir's rows rebuilt."""
-    df = (
-        spark.read.parquet(path)
-        .select(F.col("_metadata.file_path").alias("file_path"), F.col(col).alias("_v"))
-        .filter(F.col("_v").isNotNull())
-    )
-    pos = df.select(
-        "file_path",
-        F.explode(F.array(*_bloom_positions(F.col("_v"), bits, k))).alias("pos"),
-    )
-    (
-        pos.select(
-            "file_path",
-            (F.col("pos") / 64).cast("int").alias("w"),
-            # shiftleft() the SQL function takes a column shift amount;
-            # the python F.shiftleft wrapper only accepts an int literal
-            F.expr("shiftleft(CAST(1 AS BIGINT), CAST(pos % 64 AS INT))").alias("m"),
-        )
-        .groupBy("file_path", "w")
-        .agg(F.bit_or("m").alias("word"))
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(index_path)
-    )
-    _write_bloom_meta(index_path, bits, k)
-
-
-def read_bloom_pruned(
-    spark: SparkSession,
-    path: str,
-    index_path: str,
-    col: str,
-    value,
-    bits: int = _BLOOM_BITS,
-    k: int = _BLOOM_K,
-) -> DataFrame:
-    """Bloom-pruned point lookup: read only the files whose bloom has
-    ALL k bits of ``value`` set, with the equality predicate kept as a
-    residual filter so false positives cost an extra file read, never a
-    wrong row. The probe touches planning METADATA only — k positions
-    from a 1-row frame and at most ``files × k`` index rows — before
-    the data scan opens the surviving files."""
-    # the index's recorded convention wins over the call's arguments:
-    # probing with a different bits/k/hash-version than the build used
-    # would require ALL k bits of the WRONG positions and silently
-    # prune files that contain the value
-    meta = _read_bloom_meta(index_path)
-    if meta is not None:
-        if meta.get("hash_version") != _BLOOM_HASH_VERSION:
-            raise ValueError(
-                f"bloom index {index_path} was built with hash convention "
-                f"{meta.get('hash_version')} (current {_BLOOM_HASH_VERSION}) "
-                "— rebuild it with build_bloom_index"
-            )
-        bits, k = meta["bits"], meta["k"]
-    # xxhash64 hashes by TYPE as well as value: the probe literal must
-    # carry the indexed column's exact type (an int 42 and a bigint 42
-    # hash differently). Resolving the schema is a listing, not a read.
-    col_type = spark.read.parquet(path).schema[col].dataType
-    probe = (
-        spark.range(1)
-        .select(
-            F.explode(
-                F.array(*_bloom_positions(F.lit(value).cast(col_type), bits, k))
-            ).alias("pos")
-        )
-        .collect()
-    )
-    wanted: dict[int, int] = {}
-    for r in probe:
-        wanted[r["pos"] // 64] = wanted.get(r["pos"] // 64, 0) | (1 << (r["pos"] % 64))
-    idx = (
-        spark.read.parquet(index_path)
-        .filter(F.col("w").isin(list(wanted)))
-        .collect()
-    )
-    words = {(r["file_path"], r["w"]): r["word"] for r in idx}
-    files = sorted(
-        {f for f, _ in words}
-        - {
-            f
-            for f, _ in words
-            if any(words.get((f, w), 0) & m != m for w, m in wanted.items())
-        }
-    )
-    if not files:
-        return spark.read.parquet(path).filter(F.lit(False))
-    return spark.read.parquet(*files).filter(F.col(col) == F.lit(value))
 
 
 #: Above this many delete entries, read_versioned switches from the
@@ -4445,65 +3994,3 @@ def vacuum_versions(
         if n.endswith(".json.tmp") and _old_enough(p):
             os.remove(p)
     return removed
-
-
-def optimize_table(
-    spark: SparkSession,
-    path: str,
-    zorder_cols: list[str] | None = None,
-    minmax_index: tuple[str, list[str]] | None = None,
-    bloom_index: tuple[str, str, int] | None = None,
-    target_file_bytes: int = 128 << 20,
-    zorder_scaling: str = "minmax",
-) -> dict:
-    """The lakehouse ``OPTIMIZE`` composition over plain parquet: one
-    maintenance call that (1) rewrites fragmented layout — Z-order
-    clustered when ``zorder_cols`` is given (tight multi-column footer
-    stats), plain bin-packing compaction otherwise — then rebuilds the
-    derived skipping metadata so it can never go stale against the new
-    files: (2) the min/max manifest (``minmax_index=(index_path,
-    cols)``) and (3) the per-file bloom (``bloom_index=(index_path,
-    col, bits)``).
-
-    Layout rewrite and index rebuild are one unit on purpose: both
-    file-skipping indexes key on ``file_path``, so any rewrite
-    invalidates them — callers composing the pieces by hand eventually
-    ship the stale-index read. Content is preserved (the compaction
-    path validates row counts before its swap; the Z-order path is a
-    staged count-validated overwrite here). Returns a report of what
-    ran."""
-    report: dict = {}
-    if zorder_cols:
-        _recover_table(path)
-        before = spark.read.parquet(path)
-        n_before = before.count()
-        est_bytes = sum(
-            os.path.getsize(os.path.join(dp, f))
-            for dp, _, fs in os.walk(path)
-            for f in fs
-            if f.endswith(".parquet")
-        )
-        n_files = max(1, -(-est_bytes // target_file_bytes))
-        staging = f"{path}__zorder_{uuid.uuid4().hex[:8]}"
-        write_zordered(
-            before, staging, zorder_cols, num_files=n_files, scaling=zorder_scaling
-        )
-        n_after = spark.read.parquet(staging).count()
-        if n_after != n_before:
-            shutil.rmtree(staging, ignore_errors=True)
-            raise ValueError(
-                f"z-order rewrite row mismatch: {n_before} -> {n_after}"
-            )
-        _swap_table(path, staging)
-        report["zorder"] = {"rows": n_before, "files": n_files}
-    else:
-        report["compact"] = compact_files(spark, path, target_file_bytes)
-    if minmax_index:
-        idx_path, cols = minmax_index
-        build_file_index(spark, path, cols, idx_path)
-        report["minmax_index"] = {"path": idx_path, "cols": cols}
-    if bloom_index:
-        idx_path, col, bits = bloom_index
-        build_bloom_index(spark, path, col, idx_path, bits=bits)
-        report["bloom_index"] = {"path": idx_path, "col": col, "bits": bits}
-    return report

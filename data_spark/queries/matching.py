@@ -627,8 +627,8 @@ def m_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
 def pipe_incremental_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The composed incremental pipeline (VERDICT r4 #5), hash-verified
     end to end: pipelines/incremental_e2e runs scan→near-dup-gate→
-    bucketed-MERGE→manifest-refresh over a source built so every batch's
-    outcome is exactly derivable from the raw documents table —
+    bucketed-MERGE over a source built so every batch's outcome is
+    exactly derivable from the raw documents table —
 
     - batch 1: the N originals — nothing in the index yet, all merged;
     - batch 2: N near-dup variants (text + ' v2 dup' suffix, char-
@@ -643,11 +643,12 @@ def pipe_incremental_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     A hash match therefore proves the processed-log anti-join batched
     exactly by key order, the index answered the online near-dup
     question correctly in both directions, and the bucketed MERGE
-    accreted exactly the surviving rows. The O(delta) cost side —
-    touched-bucket reads ≪ store, manifest upkeep without full rescans
-    — is pinned by test_incremental_e2e (those counts depend on the
-    engine's xxhash64 bucket layout, deliberately not part of the
-    cross-engine contract).
+    accreted exactly the surviving rows (``store_rows_total`` is summed
+    from the store's parquet footers, so it counts what was written).
+    The O(delta) cost side — touched-bucket reads ≪ store — is pinned
+    by test_incremental_e2e (those counts depend on the engine's
+    xxhash64 bucket layout, deliberately not part of the cross-engine
+    contract).
 
     Reference parity: this is the reference's entire load loop in one
     artifact — hash-log anti-join batching, dedup before write,

@@ -1,101 +1,24 @@
-"""Small-file compaction (io.compact_files): content-preserving
-bin-packing rewrite with rollback, plus the already-compact no-op."""
+"""Layout maintenance: the versioned store's commit log, tombstones,
+compaction, OPTIMIZE ZORDER, vacuum and manifest publish, plus the
+plain-parquet z-order writer and the staged table swap's crash
+recovery (``validated_overwrite``)."""
 
 from __future__ import annotations
 
 import os
 
 import pytest
-
-from data_spark.io import compact_files
 from pyspark.sql import functions as F
 
 
-def _parquet_files(path):
-    return sorted(
-        os.path.join(root, n)
-        for root, _d, names in os.walk(path)
-        for n in names
-        if n.endswith(".parquet")
+def _file_envelopes(spark, path, col):
+    """Per-file ``(min, max)`` of ``col`` over a plain parquet dataset,
+    grouped by the hidden ``_metadata.file_path`` column."""
+    return (
+        spark.read.parquet(path)
+        .groupBy(F.col("_metadata.file_path").alias("f"))
+        .agg(F.min(col).alias("lo"), F.max(col).alias("hi"))
     )
-
-
-@pytest.fixture()
-def fragmented(spark, sf_small, tmp_path):
-    src = spark.read.parquet(f"{sf_small}/lineitem.parquet")
-    path = str(tmp_path / "frag")
-    src.repartition(40).write.parquet(path)
-    return path, src
-
-
-def test_compact_reduces_files_and_preserves_content(spark, fragmented):
-    path, src = fragmented
-    before = spark.read.parquet(path)
-    n_rows = before.count()
-    assert len(_parquet_files(path)) == 40
-
-    stats = compact_files(spark, path, target_file_bytes=1 << 30)
-    assert stats["rewritten"] is True
-    assert stats["files_before"] == 40
-    assert stats["files_after"] < 40
-
-    after = spark.read.parquet(path)
-    assert after.count() == n_rows
-    # content-identical both ways (multiset equality)
-    assert after.exceptAll(src).count() == 0
-    assert src.exceptAll(after).count() == 0
-
-
-def test_compact_noop_when_already_packed(spark, fragmented):
-    path, _src = fragmented
-    # a 1-byte target wants >= 40 files, so nothing to gain: no rewrite
-    files_before = _parquet_files(path)
-    stats = compact_files(spark, path, target_file_bytes=1)
-    assert stats["rewritten"] is False
-    assert _parquet_files(path) == files_before
-
-
-def test_file_index_prunes_non_overlapping_files(spark, tmp_path):
-    """Manifest pruning: a range-sorted multi-file dataset + file-level
-    min/max index lets a bounded read open ONLY the overlapping files
-    (checked via inputFiles) while returning exactly the full-scan
-    answer."""
-    from data_spark.io import build_file_index, read_index_pruned
-
-    path = str(tmp_path / "facts")
-    idx = str(tmp_path / "facts_idx")
-    df = spark.range(0, 10000).select(
-        F.col("id").alias("k"), (F.col("id") % 97).alias("v")
-    )
-    # 8 range-partitioned files => tight, disjoint k envelopes
-    df.repartitionByRange(8, "k").sortWithinPartitions("k").write.mode(
-        "overwrite"
-    ).parquet(path)
-
-    build_file_index(spark, path, ["k"], idx)
-    index = spark.read.parquet(idx)
-    n_files = index.count()
-    assert n_files == 8
-    assert index.columns == ["file_path", "n_rows", "k__min", "k__max"]
-    # the index is per-FILE metadata: row counts fold back to the table
-    assert index.agg(F.sum("n_rows")).first()[0] == 10000
-
-    pruned = read_index_pruned(spark, path, idx, "k", 2000, 3000)
-    opened = pruned.inputFiles()
-    assert 0 < len(opened) < n_files  # pruning actually dropped files
-    expect = sorted(
-        (r["k"], r["v"])
-        for r in spark.read.parquet(path)
-        .filter((F.col("k") >= 2000) & (F.col("k") <= 3000))
-        .collect()
-    )
-    got = sorted((r["k"], r["v"]) for r in pruned.collect())
-    assert got == expect
-
-    # fully out-of-range probe: zero files, empty result, schema kept
-    empty = read_index_pruned(spark, path, idx, "k", 50000, 60000)
-    assert empty.count() == 0
-    assert empty.columns == ["k", "v"]
 
 
 def test_versioned_table_time_travel_and_restore(spark, tmp_path):
@@ -147,180 +70,13 @@ def test_versioned_table_time_travel_and_restore(spark, tmp_path):
     assert data[0].startswith("commit-0-") and data[1].startswith("commit-1-")
 
 
-def test_bloom_index_prunes_point_lookups_on_unclustered_column(spark, tmp_path):
-    """Bloom data skipping: the layout is range-clustered by k, so every
-    file's min/max envelope for the UNCLUSTERED column u spans the whole
-    domain (min/max pruning would open everything) — the per-file bloom
-    still prunes a point probe on u down to the file(s) that can contain
-    it, and the residual equality filter keeps false positives harmless."""
-    from data_spark.io import build_bloom_index, read_bloom_pruned
-
-    path = str(tmp_path / "facts")
-    idx = str(tmp_path / "facts_bloom")
-    df = spark.range(0, 4000).select(
-        F.col("id").alias("k"),
-        # u is a permuted id: uniformly spread across files, unsorted
-        (F.pmod(F.col("id") * 2654435761, F.lit(1000003))).alias("u"),
-        (F.col("id") % 97).alias("v"),
-    )
-    df.repartitionByRange(8, "k").sortWithinPartitions("k").write.mode(
-        "overwrite"
-    ).parquet(path)
-
-    # min/max on u can't prune: every file's envelope covers the probe
-    full = spark.read.parquet(path)
-    n_files = len(full.inputFiles())
-    assert n_files == 8
-    probe_u = full.filter(F.col("k") == 1234).select("u").first()["u"]
-    env = (
-        full.select(F.col("_metadata.file_path").alias("f"), "u")
-        .groupBy("f")
-        .agg(F.min("u").alias("lo"), F.max("u").alias("hi"))
-        .filter((F.col("lo") <= probe_u) & (F.col("hi") >= probe_u))
-        .count()
-    )
-    assert env == n_files  # envelopes are useless here — bloom's case
-
-    build_bloom_index(spark, path, "u", idx)
-    pruned = read_bloom_pruned(spark, path, idx, "u", probe_u)
-    opened = pruned.inputFiles()
-    assert 0 < len(opened) < n_files  # skipped files min/max never could
-    expect = sorted(tuple(r) for r in full.filter(F.col("u") == probe_u).collect())
-    got = sorted(tuple(r) for r in pruned.collect())
-    assert got == expect and len(got) >= 1
-
-    # absent value: no file's bloom has all k bits -> empty, schema kept
-    # (false positives may open a file; the residual filter still yields 0 rows)
-    absent = read_bloom_pruned(spark, path, idx, "u", 999999999)
-    assert absent.count() == 0
-    assert absent.columns == ["k", "u", "v"]
-
-
-def test_bloom_index_null_column_files_prune_away(spark, tmp_path):
-    """Files whose indexed column is entirely NULL set no bloom bits and
-    are never opened by an equality probe (NULL can't equal anything)."""
-    from data_spark.io import build_bloom_index, read_bloom_pruned
-
-    path = str(tmp_path / "facts")
-    idx = str(tmp_path / "facts_bloom")
-    some = spark.range(0, 100).select(F.col("id").alias("u"), F.lit("a").alias("s"))
-    nulls = spark.range(0, 100).select(
-        F.lit(None).cast("bigint").alias("u"), F.lit("b").alias("s")
-    )
-    some.coalesce(1).write.mode("overwrite").parquet(path)
-    nulls.coalesce(1).write.mode("append").parquet(path)
-    build_bloom_index(spark, path, "u", idx)
-    got = read_bloom_pruned(spark, path, idx, "u", 42)
-    assert len(got.inputFiles()) == 1
-    assert [tuple(r) for r in got.collect()] == [(42, "a")]
-
-
-def test_optimize_table_rewrites_layout_and_rebuilds_indexes(spark, tmp_path):
-    """The OPTIMIZE composition: a fragmented table is z-order rewritten
-    (content preserved), and BOTH skipping indexes are rebuilt against
-    the new file paths in the same call — a by-hand composition that
-    rewrote the layout but kept the old indexes would prune on paths
-    that no longer exist."""
-    from data_spark.io import optimize_table, read_bloom_pruned, read_index_pruned
-
-    path = str(tmp_path / "facts")
-    mm_idx = str(tmp_path / "mm")
-    bl_idx = str(tmp_path / "bloom")
-    df = spark.range(0, 20000).select(
-        F.col("id").alias("k"),
-        F.pmod(F.col("id") * 2654435761, F.lit(1000003)).alias("u"),
-        (F.col("id") % 13).alias("x"),
-        ((F.col("id") * 7) % 17).alias("y"),
-    )
-    # fragment: 40 tiny files
-    df.repartition(40).write.mode("overwrite").parquet(path)
-    before = sorted(tuple(r) for r in spark.read.parquet(path).collect())
-    n_files_before = len(spark.read.parquet(path).inputFiles())
-    assert n_files_before == 40
-
-    report = optimize_table(
-        spark,
-        path,
-        zorder_cols=["x", "y"],
-        minmax_index=(mm_idx, ["k"]),
-        bloom_index=(bl_idx, "u", 1 << 15),
-    )
-    assert report["zorder"]["rows"] == 20000
-    after = sorted(tuple(r) for r in spark.read.parquet(path).collect())
-    assert after == before  # content preserved through the rewrite
-    n_files_after = len(spark.read.parquet(path).inputFiles())
-    assert n_files_after < n_files_before  # actually defragmented
-
-    # both indexes were rebuilt against the NEW files and prune correctly
-    probe_u = after[12345][1]
-    got_bloom = read_bloom_pruned(spark, path, bl_idx, "u", probe_u, bits=1 << 15)
-    assert sorted(tuple(r) for r in got_bloom.collect()) == sorted(
-        t for t in after if t[1] == probe_u
-    )
-    got_mm = read_index_pruned(spark, path, mm_idx, "k", 100, 200)
-    assert sorted(r.k for r in got_mm.collect()) == list(range(100, 201))
-
-    # compaction-only path (no zorder): same guarantees, report differs
-    df.repartition(30).write.mode("overwrite").parquet(path)
-    report2 = optimize_table(spark, path, minmax_index=(mm_idx, ["k"]))
-    assert "compact" in report2 and "zorder" not in report2
-    assert sorted(tuple(r) for r in spark.read.parquet(path).collect()) == before
-
-
-def test_bloom_refresh_for_dirs_is_o_delta_and_equals_rebuild(spark, tmp_path):
-    """O(delta) bloom upkeep: after one partition dir is rewritten,
-    refreshing ONLY that dir yields an index row-equal to a full
-    rebuild, untouched files' words survive byte-identically, and a
-    probe for a value that only exists in the rewritten dir finds it."""
-    from data_spark.io import (
-        build_bloom_index,
-        read_bloom_pruned,
-        refresh_bloom_index_for_dirs,
-    )
-
-    path = str(tmp_path / "facts")
-    idx = str(tmp_path / "bloom")
-    bits = 1 << 14
-    df = spark.range(0, 3000).select(
-        (F.col("id") % 4).alias("part"),
-        F.pmod(F.col("id") * 2654435761, F.lit(999983)).alias("u"),
-    )
-    df.write.mode("overwrite").partitionBy("part").parquet(path)
-    build_bloom_index(spark, path, "u", idx, bits=bits)
-    before = {
-        (r.file_path, r.w): r.word for r in spark.read.parquet(idx).collect()
-    }
-
-    # rewrite partition 2 with brand-new values
-    spark.range(0, 500).select(
-        F.lit(2).alias("part"), (F.col("id") + 5_000_000).alias("u")
-    ).write.mode("overwrite").parquet(f"{path}/part=2")
-    refresh_bloom_index_for_dirs(spark, path, ["part=2"], "u", idx, bits=bits)
-
-    after = {(r.file_path, r.w): r.word for r in spark.read.parquet(idx).collect()}
-    untouched_before = {k: v for k, v in before.items() if "part=2" not in k[0]}
-    untouched_after = {k: v for k, v in after.items() if "part=2" not in k[0]}
-    assert untouched_before == untouched_after  # O(delta): others untouched
-
-    # refresh == rebuild (same per-file words, new file paths included)
-    idx2 = str(tmp_path / "bloom_rebuilt")
-    build_bloom_index(spark, path, "u", idx2, bits=bits)
-    rebuilt = {(r.file_path, r.w): r.word for r in spark.read.parquet(idx2).collect()}
-    assert after == rebuilt
-
-    # the refreshed bloom serves probes for the NEW values
-    got = read_bloom_pruned(spark, path, idx, "u", 5_000_123, bits=bits)
-    assert [r.u for r in got.collect()] == [5_000_123]
-    assert 0 < len(got.inputFiles()) < len(spark.read.parquet(path).inputFiles())
-
-
 def test_rank_scaled_zorder_clusters_skewed_keys(spark, tmp_path):
     """Skew resistance: with 90% of u in a tiny dense range, min-max
     z-order collapses the cluster into one interleave level and a dense
     sub-range probe overlaps almost every file's envelope; rank (equi-
     depth) levels spread the cluster, so the same probe overlaps far
     fewer files. Content is identical either way."""
-    from data_spark.io import build_file_index, write_zordered
+    from data_spark.io import write_zordered
 
     df = spark.range(0, 20000).select(
         F.col("id").alias("k"),
@@ -338,13 +94,12 @@ def test_rank_scaled_zorder_clusters_skewed_keys(spark, tmp_path):
         # every file's envelope covers the probe; rank levels keep
         # separating values inside the cluster
         path = str(tmp_path / f"z_{mode}")
-        idx = str(tmp_path / f"z_{mode}_idx")
         write_zordered(df, path, ["u", "v"], num_files=16, scaling=mode)
-        build_file_index(spark, path, ["u"], idx)
-        index = spark.read.parquet(idx)
-        n = index.filter(
-            (F.col("u__min") <= 60) & (F.col("u__max") >= 40)
-        ).count()
+        n = (
+            _file_envelopes(spark, path, "u")
+            .filter((F.col("lo") <= 60) & (F.col("hi") >= 40))
+            .count()
+        )
         rows = sorted(tuple(r) for r in spark.read.parquet(path).collect())
         return n, rows
 
@@ -370,7 +125,7 @@ def test_zorder_four_columns_fits_bigint(spark, tmp_path):
     and the whole rewrite died with NumberFormatException (ADVICE r6).
     The level width now auto-shrinks to ``63 // n_cols``; content is
     preserved and the layout still prunes on every key."""
-    from data_spark.io import build_file_index, optimize_table, write_zordered
+    from data_spark.io import optimize_versioned, read_versioned, write_versioned, write_zordered
 
     df = spark.range(0, 8000).select(
         (F.col("id") % 97).alias("a"),
@@ -388,34 +143,30 @@ def test_zorder_four_columns_fits_bigint(spark, tmp_path):
         # files only ~3 interleave bits order the range partitioning,
         # and LSB-first interleave puts the LAST column's top bit
         # highest — so `d` is the strongest-pruned key here.
-        idx = str(tmp_path / f"z4_{mode}_idx")
-        build_file_index(spark, path, ["d"], idx)
         n_overlap = (
-            spark.read.parquet(idx)
-            .filter((F.col("d__min") <= 5) & (F.col("d__max") >= 0))
+            _file_envelopes(spark, path, "d")
+            .filter((F.col("lo") <= 5) & (F.col("hi") >= 0))
             .count()
         )
         assert n_overlap < 8, (mode, n_overlap)
 
-    # and through the OPTIMIZE composition (the reproduced failure path)
-    path = str(tmp_path / "z4_opt")
-    df.repartition(20).write.parquet(path)
-    report = optimize_table(spark, path, zorder_cols=["a", "b", "c", "d"])
-    assert report["zorder"]["rows"] == 8000
-    assert sorted(tuple(r) for r in spark.read.parquet(path).collect()) == before
+    # and through OPTIMIZE ZORDER on the versioned store (the reproduced
+    # failure path)
+    table = str(tmp_path / "z4_opt")
+    write_versioned(df.repartition(20), table)
+    v = optimize_versioned(spark, table, zorder_cols=["a", "b", "c", "d"])
+    assert sorted(tuple(r) for r in read_versioned(spark, table, v).collect()) == before
 
 
 def test_table_swap_crash_recovery(spark, tmp_path):
     """A crash between a table swap's two renames leaves NO directory at
-    `path` and the pre-swap table under a backup name. Every staged
-    rewriter (validated_overwrite / compact_files / optimize_table) must
-    restore it on the next call instead of failing on a missing table —
-    the same discipline _recover_index gives the skipping indexes
+    `path` and the pre-swap table under a backup name. The next staged
+    rewrite (validated_overwrite) must restore it instead of failing on
+    a missing table, and sweep the crashed rewrite's leftovers
     (ADVICE r6)."""
-    from data_spark.io import optimize_table, validated_overwrite
+    from data_spark.io import validated_overwrite
 
     df = spark.range(0, 1000).select(F.col("id").alias("k"), (F.col("id") % 7).alias("x"))
-    rows = sorted(tuple(r) for r in df.collect())
 
     def crash_mid_swap(path):
         # backup-rename happened, live-rename did not; a stale staging
@@ -423,40 +174,25 @@ def test_table_swap_crash_recovery(spark, tmp_path):
         os.rename(path, f"{path}__bak_deadbeef")
         spark.range(3).write.parquet(f"{path}__staging_deadbeef")
 
-    # compact_files recovers and still compacts
-    path = str(tmp_path / "t1")
-    df.repartition(20).write.parquet(path)
-    crash_mid_swap(path)
-    stats = compact_files(spark, path, target_file_bytes=1 << 30)
-    assert stats["rewritten"] and stats["files_after"] < 20
-    assert sorted(tuple(r) for r in spark.read.parquet(path).collect()) == rows
-    assert not os.path.exists(f"{path}__bak_deadbeef")
-    assert not os.path.exists(f"{path}__staging_deadbeef")
-
-    # optimize_table's z-order path recovers too
-    path = str(tmp_path / "t2")
-    df.repartition(20).write.parquet(path)
-    crash_mid_swap(path)
-    optimize_table(spark, path, zorder_cols=["k", "x"])
-    assert sorted(tuple(r) for r in spark.read.parquet(path).collect()) == rows
-
     # validated_overwrite recovers the baseline BEFORE the shrink check:
     # a shrinking load must roll back against the restored table
-    path = str(tmp_path / "t3")
+    path = str(tmp_path / "t")
     df.repartition(4).write.parquet(path)
     crash_mid_swap(path)
     with pytest.raises(ValueError, match="rollback"):
         validated_overwrite(spark.range(5).select(F.col("id").alias("k")), path)
     assert sorted(r.k for r in spark.read.parquet(path).collect()) == list(range(1000))
+    assert not os.path.exists(f"{path}__bak_deadbeef")
+    assert not os.path.exists(f"{path}__staging_deadbeef")
 
 
 def test_bloom_double_hash_stride_never_degenerates(spark, tmp_path):
     """Double hashing h1 + i·h2 collapses all k probes onto h1 whenever
     h2 ≡ 0 (mod m) — those values effectively get a 1-hash bloom and a
     far higher fpp (extra file reads). The stride is now forced into
-    [1, m-1]; build and probe share the expression, so lookups stay
-    exact either way."""
-    from data_spark.io import _bloom_positions, build_bloom_index, read_bloom_pruned
+    [1, m-1]; the store's bloom build and probe share the expression,
+    so point lookups stay exact either way."""
+    from data_spark.io import _bloom_positions, read_versioned, write_versioned
 
     bits, k = 4096, 5
     # find values whose OLD stride xxhash64(v,1) % bits was 0
@@ -473,15 +209,28 @@ def test_bloom_double_hash_stride_never_degenerates(spark, tmp_path):
     for r in pos_df.collect():
         assert len(set(r.pos)) > 1, r.pos
 
-    # and a build+probe round trip on such a value stays exact
-    path = str(tmp_path / "facts")
-    idx = str(tmp_path / "bloom")
-    spark.range(0, 2000).select(
-        F.when(F.col("id") == 0, F.lit(degenerate[0])).otherwise(F.col("id") + 10_000_000).alias("u")
-    ).repartition(8).write.parquet(path)
-    build_bloom_index(spark, path, "u", idx, bits=bits, k=k)
-    got = read_bloom_pruned(spark, path, idx, "u", degenerate[0], bits=bits, k=k)
-    assert [r.u for r in got.collect()] == [degenerate[0]]
+    # and a store build+probe round trip on such a value stays exact.
+    # The store hashes its key tuple as one struct, so pick a value whose
+    # OLD stride was 0 under that form
+    h2_struct = F.pmod(F.xxhash64(F.struct(F.col("id")), F.lit(1)), F.lit(bits))
+    u0 = spark.range(0, 500_000).filter(h2_struct == 0).first()["id"]
+    table = str(tmp_path / "t")
+    write_versioned(
+        spark.range(0, 2000)
+        .select(F.when(F.col("id") == 0, F.lit(u0)).otherwise(F.col("id") + 10_000_000).alias("u"))
+        .repartition(8),
+        table,
+        bloom_cols=["u"],
+        bloom_bits=bits,
+    )
+    got = read_versioned(spark, table, where=f"u = {u0}")
+    assert [r.u for r in got.collect()] == [u0]
+    # the bloom was consulted: files that cannot hold u0 were skipped
+    assert len(got.inputFiles()) < len(read_versioned(spark, table).inputFiles())
+
+    # degenerate sizing is rejected outright
+    with pytest.raises(ValueError, match="bits"):
+        _bloom_positions(F.lit(1), bits=1, k=3)
 
 
 def test_tombstone_delete_lifecycle(spark, tmp_path):
@@ -899,50 +648,6 @@ def test_recover_table_prefers_newest_backup_by_name(spark, tmp_path):
     _recover_table(path)
     assert sorted(r.k for r in spark.read.parquet(path).collect()) == [100, 101, 102, 103]
     assert not os.path.exists(older_bak) and not os.path.exists(newer_bak)
-
-
-def test_bloom_meta_forces_rebuild_on_convention_change(spark, tmp_path):
-    """An index built under an older hash convention and then refreshed
-    incrementally must be REBUILT, not merged — mixed bit layouts make
-    probes silently prune files that contain the value (ADVICE r7)."""
-    import json
-
-    from data_spark.io import (
-        _bloom_meta_path,
-        _bloom_positions,
-        build_bloom_index,
-        read_bloom_pruned,
-        refresh_bloom_index_for_dirs,
-    )
-
-    path = str(tmp_path / "t")
-    for b in range(4):
-        spark.range(b * 100, (b + 1) * 100).select(
-            F.col("id").alias("k"), (F.col("id") % 10).alias("__kb")
-        ).write.parquet(os.path.join(path, f"__kb={b}"))
-    idx = str(tmp_path / "idx")
-    build_bloom_index(spark, path, "k", idx)
-    with open(_bloom_meta_path(idx)) as f:
-        assert json.load(f)["hash_version"] == 2
-
-    # probing against a stale convention refuses instead of mis-pruning
-    with open(_bloom_meta_path(idx), "w") as f:
-        json.dump({"bits": 4096, "k": 5, "hash_version": 1}, f)
-    with pytest.raises(ValueError, match="hash convention"):
-        read_bloom_pruned(spark, path, idx, "k", 123)
-
-    # an incremental refresh over the stale index rebuilds the whole
-    # thing (meta restored, every value findable again)
-    refresh_bloom_index_for_dirs(spark, path, ["__kb=1"], "k", idx)
-    with open(_bloom_meta_path(idx)) as f:
-        assert json.load(f)["hash_version"] == 2
-    for probe in (7, 123, 399):
-        got = sorted(r.k for r in read_bloom_pruned(spark, path, idx, "k", probe).collect())
-        assert got == [probe]
-
-    # degenerate sizing is rejected outright
-    with pytest.raises(ValueError, match="bits"):
-        _bloom_positions(F.lit(1), bits=1, k=3)
 
 
 def test_append_retry_keeps_stats_on_renamed_commit_dir(spark, tmp_path):

@@ -5,7 +5,7 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 
-from data_spark.io import read_table, write_partitioned
+from data_spark.io import read_table
 from data_spark.operators.skew import add_salt, explode_salt, salted_agg
 from data_spark.plans import plan_report, register_fec_views, register_testdata_views, sql
 from tests.fec_fixtures import write_fixtures
@@ -123,7 +123,7 @@ def test_salted_join_equals_plain(spark):
 def test_partitioned_write_prunes(spark, sf_small, tmp_path):
     ev = read_table(spark, sf_small, "events")
     out = str(tmp_path / "events_parted")
-    write_partitioned(ev, out, ["event_type"])
+    ev.write.mode("overwrite").partitionBy("event_type").parquet(out)
     back = spark.read.parquet(out).filter(F.col("event_type") == "click")
     rep = plan_report(back)
     assert rep["partition_filters"] is True

@@ -720,40 +720,6 @@ def test_stream_event_time_join_left_outer_emits_nulls(spark, tmp_path):
     assert not any(c == 90 for _, c in got)
 
 
-def test_overwrite_partitions_dynamic(spark, tmp_path):
-    """Dynamic partition overwrite replaces only the partitions in the
-    incoming frame; static mode (the default) truncates the table."""
-    from data_spark.io import overwrite_partitions_dynamic
-
-    path = str(tmp_path / "dpo")
-    base = spark.createDataFrame(
-        [("2024-01-01", 1, 10.0), ("2024-01-02", 2, 20.0), ("2024-01-03", 3, 30.0)],
-        "day string, k int, v double",
-    )
-    base.write.mode("overwrite").partitionBy("day").parquet(path)
-
-    patch = spark.createDataFrame(
-        [("2024-01-02", 2, 99.0)], "day string, k int, v double"
-    )
-    overwrite_partitions_dynamic(patch, path, ["day"])
-
-    # partition-column type inference reads `day` back as a DATE —
-    # normalize to the ISO string for the comparison
-    got = {
-        (str(r.day), r.k, r.v) for r in spark.read.parquet(path).collect()
-    }
-    assert got == {
-        ("2024-01-01", 1, 10.0),
-        ("2024-01-02", 2, 99.0),
-        ("2024-01-03", 3, 30.0),
-    }
-    # session conf restored
-    assert (
-        spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        == "static"
-    )
-
-
 def test_cms_state_sink_folds_registers(spark, tmp_path):
     """Micro-batch CMS registers SUM-fold into the state table: the
     folded estimates equal a one-shot build over everything streamed
@@ -820,27 +786,6 @@ def test_cms_state_sink_folds_registers(spark, tmp_path):
         for r in read_cms_state_estimates(spark, state_path, [2, 3, 7]).collect()
     )
     assert after == before
-
-
-def test_read_with_schema_evolution(spark, tmp_path):
-    """Files written under evolved schemas read back as one unified
-    schema with NULL back-fill; the default single-footer read may
-    silently drop the late-added column."""
-    from data_spark.io import read_with_schema_evolution
-
-    path = str(tmp_path / "evolving")
-    spark.createDataFrame([(1, "a")], "id long, s string").write.mode(
-        "append"
-    ).parquet(path)
-    spark.createDataFrame(
-        [(2, "b", 9.5)], "id long, s string, score double"
-    ).write.mode("append").parquet(path)
-
-    got = {
-        r.id: (r.s, r.score)
-        for r in read_with_schema_evolution(spark, path).collect()
-    }
-    assert got == {1: ("a", None), 2: ("b", 9.5)}
 
 
 def test_kll_state_sink_folds_quantile_sketches(spark, tmp_path):

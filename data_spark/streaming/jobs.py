@@ -20,6 +20,7 @@ from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
 from pyspark.sql.window import Window
 
+from data_spark.io import partition_staging_dir, recover_partitioned_root, swap_partition_dir
 from data_spark.operators.merge import delete_then_insert, merge_upsert
 from data_spark.session import local_frame
 
@@ -238,11 +239,15 @@ def merge_batch_into_bucketed(
     Scale posture: the batch's keys hash to a set of ``__kb`` buckets;
     only those partition directories are read (partition-pruned scan)
     and rewritten. Each rewritten bucket is swapped in by rename
-    (staging dir → backup → promote), so a crash leaves every bucket
-    either old or new, never half-written — and because the merge is
-    idempotent last-write-wins, the foreachBatch retry converges the
-    remaining buckets. This replaces a full-table overwrite that was
-    both O(|table|) per batch and destructive on crash.
+    (:func:`io.swap_partition_dir`: staging and backup both live in
+    sibling roots of ``target_path``, never inside it), and every call
+    starts with :func:`io.recover_partitioned_root`, which restores the
+    backup of a swap that crashed between its two renames. So a crash
+    leaves every bucket either old or new, never half-written or
+    missing — and because the merge is idempotent last-write-wins, the
+    foreachBatch retry converges the remaining buckets. This replaces a
+    full-table overwrite that was both O(|table|) per batch and
+    destructive on crash.
 
     ``prev_key``: amendment delete-then-insert
     (load_graph_expenditures/cypher.py:40-75 semantics) — requires a
@@ -250,8 +255,6 @@ def merge_batch_into_bucketed(
     hashing the ``prev_key`` value as that key.
     """
     import os
-    import shutil
-    import uuid
 
     if prev_key is not None and len(keys) != 1:
         raise ValueError("prev_key amendment routing requires a single merge key")
@@ -266,14 +269,18 @@ def merge_batch_into_bucketed(
         batch = batch.dropDuplicates(keys)
     batch = batch.withColumn(BUCKET_COL, _key_bucket(keys, num_buckets))
 
+    recover_partitioned_root(target_path)
+    # the whole output is staged in the sibling staging root, so a crash
+    # leaves nothing that partition discovery would read as a bucket
+    staging = partition_staging_dir(os.path.join(target_path, "merge"))
     if not os.path.exists(target_path):
         out = batch.drop(prev_key) if prev_key and prev_key in batch.columns else batch
-        staging = f"{target_path}__staging_{uuid.uuid4().hex[:8]}"
         # cluster by the partition column so each bucket dir is written
         # by one task, not one file per task per dir (guide §6.2)
         out = out.repartition(num_buckets, BUCKET_COL)
         out.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(staging)
         os.rename(staging, target_path)
+        recover_partitioned_root(target_path)  # drop the emptied staging root
         return
 
     # Touched buckets: the batch's own keys plus (amendment path) the
@@ -311,7 +318,6 @@ def merge_batch_into_bucketed(
     # re-inserts the amendment row with its own key) — recompute.
     merged = merged.withColumn(BUCKET_COL, _key_bucket(keys, num_buckets))
 
-    staging = f"{target_path}__staging_{uuid.uuid4().hex[:8]}"
     # one task per rewritten bucket dir (see the bootstrap write above)
     merged = merged.repartition(max(len(touched), 1), BUCKET_COL)
     merged.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(staging)
@@ -319,13 +325,15 @@ def merge_batch_into_bucketed(
         part = f"{BUCKET_COL}={kb}"
         new_dir = os.path.join(staging, part)
         cur_dir = os.path.join(target_path, part)
-        backup = f"{cur_dir}__bak"
+        if not os.path.exists(new_dir):
+            if not os.path.exists(cur_dir):
+                continue  # an amendment's predecessor bucket that never held rows
+            os.mkdir(new_dir)  # every row left the bucket
         if os.path.exists(cur_dir):
-            os.rename(cur_dir, backup)
-        if os.path.exists(new_dir):
-            os.rename(new_dir, cur_dir)
-        shutil.rmtree(backup, ignore_errors=True)
-    shutil.rmtree(staging, ignore_errors=True)
+            swap_partition_dir(cur_dir, new_dir)
+        else:
+            os.rename(new_dir, cur_dir)  # the bucket's first rows
+    recover_partitioned_root(target_path)  # drop the emptied staging and backup roots
 
 
 def merge_upsert_sink(

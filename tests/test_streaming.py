@@ -197,6 +197,61 @@ def test_merge_sink_order_col_keeps_newest_within_batch(spark, tmp_path):
     assert got[1] == (3, "newest")
 
 
+def test_merge_sink_recovers_a_bucket_swap_that_crashed(spark, tmp_path, monkeypatch):
+    """A crash between a bucket swap's two renames leaves the bucket's
+    live dir missing and its backup parked in the sibling backup root.
+    The next merge (the foreachBatch retry) restores it before reading,
+    and the store ends with every key's newest version; the key-bucket
+    column stays an int throughout."""
+    from data_spark.streaming.jobs import BUCKET_COL, merge_batch_into_bucketed
+
+    target = str(tmp_path / "crash_target")
+    schema = "k bigint, ver bigint, v string"
+    base = [(k, 1, f"base{k}") for k in range(40)]
+    b1 = [(k, 2, f"b1_{k}") for k in range(0, 40, 3)] + [(100, 2, "new100")]
+    b2 = [(k, 3, f"b2_{k}") for k in range(0, 40, 4)]
+    merge_batch_into_bucketed(
+        spark.createDataFrame(base, schema), target, keys=["k"], order_col="ver", num_buckets=4
+    )
+
+    class Crash(Exception):
+        pass
+
+    real_rename = os.rename
+
+    def rename(src, dst):
+        # the swap's live rename of bucket 1: its backup is already parked
+        if str(dst).endswith(f"{BUCKET_COL}=1") and "__compact_staging" in str(src):
+            raise Crash
+        real_rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", rename)
+    with pytest.raises(Crash):
+        merge_batch_into_bucketed(
+            spark.createDataFrame(b1, schema), target, keys=["k"], order_col="ver", num_buckets=4
+        )
+    monkeypatch.setattr(os, "rename", real_rename)
+    assert not os.path.exists(os.path.join(target, f"{BUCKET_COL}=1"))
+    assert os.path.isdir(os.path.join(f"{target}__compact_bak", f"{BUCKET_COL}=1"))
+    assert sorted(d for d in os.listdir(target) if d.startswith(f"{BUCKET_COL}=")) == [
+        f"{BUCKET_COL}=0", f"{BUCKET_COL}=2", f"{BUCKET_COL}=3"
+    ]
+
+    for rows in (b1, b2):  # the retry, then the next batch
+        merge_batch_into_bucketed(
+            spark.createDataFrame(rows, schema), target, keys=["k"], order_col="ver", num_buckets=4
+        )
+    out = spark.read.parquet(target)
+    assert dict(out.dtypes)[BUCKET_COL] == "int"
+    want = {}
+    for k, ver, v in base + b1 + b2:
+        want[k] = max(want.get(k, (ver, v)), (ver, v))
+    assert {r["k"]: (r["ver"], r["v"]) for r in out.collect()} == want
+    assert not any(
+        os.path.exists(f"{target}{tag}") for tag in ("__compact_bak", "__compact_staging")
+    )
+
+
 def test_streaming_dedup_across_batches(spark, tmp_path):
     from data_spark.streaming.stateful import streaming_dedup
 

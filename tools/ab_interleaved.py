@@ -1,4 +1,4 @@
-"""Interleaved A/B of registry queries between two code trees.
+"""Interleaved A/B between two code trees: registry queries or perfbench.
 
     python tools/ab_interleaved.py --a /tmp/wt_r13_base --b /root/repo \
         [--sf DIR] [--reps N] [--rounds K] query [query ...]
@@ -8,14 +8,30 @@ fresh JVM) inside the same host window, so host drift hits both sides
 equally (the r12 discipline; README "Bench environment variance").
 Reports per side: min of the per-round min-warm values, plus every raw
 round, and the first round's jobs/run. Output JSON on stdout.
+
+    python tools/ab_interleaved.py --a PARENT --b CHANGE \
+        --perfbench query_mix,incremental_load --seeds 701-710 [--seconds 5] \
+        [--json FILE]
+
+Perfbench mode: for each seed and workload, one ``perfbench/run.py
+--trace 0`` run in each checkout, A first on even-numbered seeds and B
+first on odd ones (A is the parent). Prints a markdown table per
+workload: for every end-to-end and report metric, each side's median
+and quartiles, how many pairs B won (lower is better for every
+perfbench metric; ties count for neither side) and whether the gap
+between the medians exceeds A's interquartile range, then every run.
+``--json`` also writes the raw runs.
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import re
+import statistics
 import subprocess
 import sys
+import time
 
 LINE = re.compile(
     r"^(\S+)\s+cold=\s*([0-9.]+)\s+warm_min=\s*([0-9.]+)\s+"
@@ -41,26 +57,7 @@ def run_side(root: str, sf: str, reps: int, names: list[str]) -> dict:
     return res
 
 
-def main() -> int:
-    args = sys.argv[1:]
-    a_root = b_root = None
-    sf, reps, rounds = "/root/testdata/sf0.1", 3, 2
-    names: list[str] = []
-    i = 0
-    while i < len(args):
-        if args[i] == "--a":
-            a_root = args[i + 1]; i += 2
-        elif args[i] == "--b":
-            b_root = args[i + 1]; i += 2
-        elif args[i] == "--sf":
-            sf = args[i + 1]; i += 2
-        elif args[i] == "--reps":
-            reps = int(args[i + 1]); i += 2
-        elif args[i] == "--rounds":
-            rounds = int(args[i + 1]); i += 2
-        else:
-            names.append(args[i]); i += 1
-    assert a_root and b_root and names
+def query_ab(a_root: str, b_root: str, sf: str, reps: int, rounds: int, names: list[str]) -> None:
     rounds_out = {"a": [], "b": []}
     for r in range(rounds):
         for side, root in (("a", a_root), ("b", b_root)):
@@ -88,6 +85,116 @@ def main() -> int:
             s["speedup_warm"] = round(s["a"]["warm_min"] / s["b"]["warm_min"], 3)
         summary[n] = s
     print(json.dumps(summary, indent=1))
+
+
+def perfbench_run(root: str, workload: str, seed: int, seconds: float) -> dict:
+    """One ``perfbench/run.py`` run in ``root``: its end-to-end and report
+    metrics by name, whether its checks passed, and its wall time."""
+    t0 = time.perf_counter()
+    out = subprocess.run(
+        [sys.executable, "perfbench/run.py", "--workload", workload, "--seed", str(seed),
+         "--seconds", str(seconds), "--trace", "0"],
+        cwd=root, capture_output=True, text=True, timeout=3600,
+    )
+    wall_s = time.perf_counter() - t0
+    lines = out.stdout.strip().splitlines()
+    try:
+        result = json.loads(lines[-1])
+    except (IndexError, json.JSONDecodeError):
+        print(out.stdout[-2000:] + out.stderr[-2000:], file=sys.stderr)
+        return {"ok": False, "failed": None, "wall_s": wall_s, "metrics": {}}
+    metrics = {k: v["value"] for k, v in result["metrics"].items()}
+    for line in lines:
+        if line.startswith("report "):
+            metrics.update((k, v["value"]) for k, v in json.loads(line[7:]).items())
+    return {"ok": result["correct"], "failed": result["failed"], "wall_s": wall_s,
+            "metrics": metrics}
+
+
+def _quartiles(xs: list[float]) -> tuple[float, float, float]:
+    q1, q2, q3 = statistics.quantiles(xs, n=4, method="inclusive")
+    return q1, q2, q3
+
+
+def perfbench_table(workload: str, pairs: list[dict]) -> str:
+    """Markdown summary and per-run rows of one workload's pairs."""
+    names = [n for n in pairs[0]["a"]["metrics"] if n != "error_rate"]
+    rows = [
+        f"**{workload}** ({len(pairs)} pairs; A = parent, B = change; "
+        f"checks passed A {sum(p['a']['ok'] for p in pairs)}, "
+        f"B {sum(p['b']['ok'] for p in pairs)})",
+        "",
+        "| metric | A median [q1, q3] | B median [q1, q3] | B/A | B wins | gap > A IQR |",
+        "|---|---|---|---|---|---|",
+    ]
+    for n in names:
+        a = [p["a"]["metrics"][n] for p in pairs]
+        b = [p["b"]["metrics"][n] for p in pairs]
+        (a1, am, a3), (b1, bm, b3) = _quartiles(a), _quartiles(b)
+        wins = sum(y < x for x, y in zip(a, b))
+        ratio = f"{bm / am:.3f}" if am else "-"
+        rows.append(
+            f"| `{n}` | {am:.4g} [{a1:.4g}, {a3:.4g}] | {bm:.4g} [{b1:.4g}, {b3:.4g}] "
+            f"| {ratio} | {wins}/{len(pairs)} | {'yes' if abs(bm - am) > a3 - a1 else 'no'} |"
+        )
+    rows += ["", "| seed | order | " + " | ".join(f"`{n}` A / B" for n in names) + " |",
+             "|---|---|" + "---|" * len(names)]
+    for p in pairs:
+        cells = [f"{p['a']['metrics'][n]:.4g} / {p['b']['metrics'][n]:.4g}" for n in names]
+        rows.append(f"| {p['seed']} | {p['order']} | " + " | ".join(cells) + " |")
+    return "\n".join(rows)
+
+
+def perfbench_ab(a_root: str, b_root: str, workloads: list[str], seeds: list[int],
+                 seconds: float, json_path: str | None) -> None:
+    roots = {"a": a_root, "b": b_root}
+    pairs: dict[str, list[dict]] = {w: [] for w in workloads}
+    for i, seed in enumerate(seeds):
+        order = "ab" if i % 2 == 0 else "ba"
+        for w in workloads:
+            pair = {"seed": seed, "order": order.upper()}
+            for side in order:
+                pair[side] = run = perfbench_run(roots[side], w, seed, seconds)
+                print(f"{w} seed {seed} {side}: ok={run['ok']} wall={run['wall_s']:.1f}s "
+                      + " ".join(f"{k}={v:.4g}" for k, v in run["metrics"].items()),
+                      file=sys.stderr, flush=True)
+            pairs[w].append(pair)
+    if json_path:
+        with open(json_path, "w") as f:
+            json.dump(pairs, f, indent=1)
+    for w in workloads:
+        ok = [p for p in pairs[w] if p["a"]["metrics"] and p["b"]["metrics"]]
+        print(perfbench_table(w, ok) if ok else f"**{w}**: no pair produced metrics", end="\n\n")
+
+
+def _seeds(spec: str) -> list[int]:
+    """``701-710`` or ``1,5,9``."""
+    if "-" in spec:
+        lo, hi = map(int, spec.split("-"))
+        return list(range(lo, hi + 1))
+    return [int(s) for s in spec.split(",")]
+
+
+def main() -> int:
+    ap = argparse.ArgumentParser(description="interleaved A/B between two checkouts")
+    ap.add_argument("--a", required=True, help="checkout A (the parent)")
+    ap.add_argument("--b", required=True, help="checkout B (the change)")
+    ap.add_argument("--sf", default="/root/testdata/sf0.1")
+    ap.add_argument("--reps", type=int, default=3)
+    ap.add_argument("--rounds", type=int, default=2)
+    ap.add_argument("--perfbench", help="comma-separated perfbench workloads")
+    ap.add_argument("--seeds", default="701-710")
+    ap.add_argument("--seconds", type=float, default=5)
+    ap.add_argument("--json", help="perfbench mode: also write the raw runs here")
+    ap.add_argument("queries", nargs="*")
+    args = ap.parse_args()
+    if args.perfbench:
+        perfbench_ab(args.a, args.b, args.perfbench.split(","), _seeds(args.seeds),
+                     args.seconds, args.json)
+    else:
+        if not args.queries:
+            ap.error("name at least one query, or use --perfbench")
+        query_ab(args.a, args.b, args.sf, args.reps, args.rounds, args.queries)
     return 0
 
 

@@ -40,11 +40,6 @@ CDS_LOG = "-Xlog:cds*=error"
 _CDS_MAGIC = (0xF00BABA8).to_bytes(4, "little")
 
 
-def cds_dir() -> str:
-    """Where the driver JVM's class-data-sharing archives live."""
-    return os.path.join(tempfile.gettempdir(), "data_spark-cds")
-
-
 def _command_lines() -> list[bytes]:
     """The command line of every process this one can see."""
     out = []
@@ -116,7 +111,8 @@ def cds_options() -> str:
     java = os.path.join(home, "bin", "java") if home else shutil.which("java")
     if java is None or not os.path.isdir("/proc"):
         return ""
-    spark_home, directory = _find_spark_home(), cds_dir()
+    spark_home = _find_spark_home()
+    directory = os.path.join(tempfile.gettempdir(), "data_spark-cds")
     default_conf = os.path.join(spark_home, "conf")
     if "SPARK_CONF_DIR" not in os.environ and os.path.isdir(default_conf):
         names = os.listdir(default_conf)
@@ -124,8 +120,8 @@ def cds_options() -> str:
             # Spark reads no template, so an empty directory is the same
             # configuration without the non-empty classpath directory a
             # dump refuses
+            os.makedirs(os.path.join(directory, "conf"), exist_ok=True)
             os.environ["SPARK_CONF_DIR"] = os.path.join(directory, "conf")
-            os.makedirs(os.environ["SPARK_CONF_DIR"], exist_ok=True)
     conf_dir = os.environ.get("SPARK_CONF_DIR", default_conf)
     if os.path.isdir(conf_dir) and os.listdir(conf_dir):
         return ""
@@ -134,13 +130,13 @@ def cds_options() -> str:
         return ""
     os.makedirs(directory, exist_ok=True)
     archive = os.path.join(directory, f"{key}.jsa")
-    if not os.path.exists(archive):
-        if publish_archive(directory, key):
-            return ""  # another JVM is building it; one dump is enough
-        if not os.path.exists(archive):
-            part = os.path.join(directory, f"{key}-{os.getpid()}.part")
-            return f"-XX:ArchiveClassesAtExit={part} {CDS_LOG}"
-    return f"-XX:SharedArchiveFile={archive} {CDS_LOG}"
+    building = publish_archive(directory, key)
+    if os.path.exists(archive):
+        return f"-XX:SharedArchiveFile={archive} {CDS_LOG}"
+    if building:
+        return ""  # another JVM is building it; one dump is enough
+    part = os.path.join(directory, f"{key}-{os.getpid()}.part")
+    return f"-XX:ArchiveClassesAtExit={part} {CDS_LOG}"
 
 
 def local_cpus() -> int:
@@ -246,7 +242,11 @@ def get_spark(app_name: str = "data_spark", shuffle_partitions: int | None = Non
     )
     if SparkContext._active_spark_context is None:
         # the options of a new JVM; getOrCreate ignores them otherwise
-        java_options = f"{DRIVER_JIT_OPTIONS} {cds_options()}".strip()
+        try:
+            cds = cds_options()
+        except OSError:  # e.g. a read-only temporary directory
+            cds = ""
+        java_options = f"{DRIVER_JIT_OPTIONS} {cds}".strip()
         builder = builder.config("spark.driver.extraJavaOptions", java_options)
     return builder.getOrCreate()
 

@@ -202,14 +202,17 @@ def test_merge_sink_recovers_a_bucket_swap_that_crashed(spark, tmp_path, monkeyp
     live dir missing and its backup parked in the sibling backup root.
     The next merge (the foreachBatch retry) restores it before reading,
     and the store ends with every key's newest version; the key-bucket
-    column stays an int throughout."""
-    from data_spark.streaming.jobs import BUCKET_COL, merge_batch_into_bucketed
+    column stays an int throughout. The batches also bring the first
+    rows of a bucket that has no live dir yet."""
+    from data_spark.streaming.jobs import BUCKET_COL, _key_bucket, merge_batch_into_bucketed
 
     target = str(tmp_path / "crash_target")
     schema = "k bigint, ver bigint, v string"
-    base = [(k, 1, f"base{k}") for k in range(40)]
-    b1 = [(k, 2, f"b1_{k}") for k in range(0, 40, 3)] + [(100, 2, "new100")]
-    b2 = [(k, 3, f"b2_{k}") for k in range(0, 40, 4)]
+    bucket = dict(spark.range(60).select("id", _key_bucket(["id"], 4)).collect())
+    base = [(k, 1, f"base{k}") for k in range(40) if bucket[k] != 3]
+    b1 = [(k, 2, f"b1_{k}") for k in range(0, 60, 3)]
+    b2 = [(k, 3, f"b2_{k}") for k in range(0, 60, 4)]
+    assert {bucket[k] for k, _, _ in b1} == {0, 1, 2, 3}
     merge_batch_into_bucketed(
         spark.createDataFrame(base, schema), target, keys=["k"], order_col="ver", num_buckets=4
     )
@@ -234,7 +237,7 @@ def test_merge_sink_recovers_a_bucket_swap_that_crashed(spark, tmp_path, monkeyp
     assert not os.path.exists(os.path.join(target, f"{BUCKET_COL}=1"))
     assert os.path.isdir(os.path.join(f"{target}__compact_bak", f"{BUCKET_COL}=1"))
     assert sorted(d for d in os.listdir(target) if d.startswith(f"{BUCKET_COL}=")) == [
-        f"{BUCKET_COL}=0", f"{BUCKET_COL}=2", f"{BUCKET_COL}=3"
+        f"{BUCKET_COL}=0", f"{BUCKET_COL}=2"
     ]
 
     for rows in (b1, b2):  # the retry, then the next batch
@@ -243,6 +246,9 @@ def test_merge_sink_recovers_a_bucket_swap_that_crashed(spark, tmp_path, monkeyp
         )
     out = spark.read.parquet(target)
     assert dict(out.dtypes)[BUCKET_COL] == "int"
+    assert sorted(d for d in os.listdir(target) if d.startswith(f"{BUCKET_COL}=")) == [
+        f"{BUCKET_COL}={i}" for i in range(4)
+    ]
     want = {}
     for k, ver, v in base + b1 + b2:
         want[k] = max(want.get(k, (ver, v)), (ver, v))

@@ -10,17 +10,16 @@ Reports per side: min of the per-round min-warm values, plus every raw
 round, and the first round's jobs/run. Output JSON on stdout.
 
     python tools/ab_interleaved.py --a PARENT --b CHANGE \
-        --perfbench query_mix,incremental_load --seeds 701-710 [--seconds 5] \
-        [--json FILE]
+        --perfbench query_mix,incremental_load --seeds 701-710 [--seconds 5]
 
 Perfbench mode: for each seed and workload, one ``perfbench/run.py
 --trace 0`` run in each checkout, A first on even-numbered seeds and B
 first on odd ones (A is the parent). Prints a markdown table per
 workload: for every end-to-end and report metric, each side's median
-and quartiles, how many pairs B won (lower is better for every
-perfbench metric; ties count for neither side) and whether the gap
-between the medians exceeds A's interquartile range, then every run.
-``--json`` also writes the raw runs.
+and quartiles, how many pairs B won (higher is better for a rate, a
+unit ``1/...``, lower for every other metric; ties count for neither
+side) and whether the gap between the medians exceeds A's
+interquartile range, then every run.
 """
 
 from __future__ import annotations
@@ -31,7 +30,6 @@ import re
 import statistics
 import subprocess
 import sys
-import time
 
 LINE = re.compile(
     r"^(\S+)\s+cold=\s*([0-9.]+)\s+warm_min=\s*([0-9.]+)\s+"
@@ -89,31 +87,26 @@ def query_ab(a_root: str, b_root: str, sf: str, reps: int, rounds: int, names: l
 
 def perfbench_run(root: str, workload: str, seed: int, seconds: float) -> dict:
     """One ``perfbench/run.py`` run in ``root``: its end-to-end and report
-    metrics by name, whether its checks passed, and its wall time."""
-    t0 = time.perf_counter()
+    metrics by name, the names of those that are rates, and whether its
+    checks passed."""
     out = subprocess.run(
         [sys.executable, "perfbench/run.py", "--workload", workload, "--seed", str(seed),
          "--seconds", str(seconds), "--trace", "0"],
         cwd=root, capture_output=True, text=True, timeout=3600,
     )
-    wall_s = time.perf_counter() - t0
     lines = out.stdout.strip().splitlines()
     try:
         result = json.loads(lines[-1])
     except (IndexError, json.JSONDecodeError):
         print(out.stdout[-2000:] + out.stderr[-2000:], file=sys.stderr)
-        return {"ok": False, "failed": None, "wall_s": wall_s, "metrics": {}}
-    metrics = {k: v["value"] for k, v in result["metrics"].items()}
+        return {"ok": False, "metrics": {}, "rates": []}
+    found = dict(result["metrics"])
     for line in lines:
         if line.startswith("report "):
-            metrics.update((k, v["value"]) for k, v in json.loads(line[7:]).items())
-    return {"ok": result["correct"], "failed": result["failed"], "wall_s": wall_s,
-            "metrics": metrics}
-
-
-def _quartiles(xs: list[float]) -> tuple[float, float, float]:
-    q1, q2, q3 = statistics.quantiles(xs, n=4, method="inclusive")
-    return q1, q2, q3
+            found.update(json.loads(line[len("report "):]))
+    return {"ok": result["correct"] and result["failed"] == 0,
+            "metrics": {k: v["value"] for k, v in found.items()},
+            "rates": [k for k, v in found.items() if v["unit"].startswith("1/")]}
 
 
 def perfbench_table(workload: str, pairs: list[dict]) -> str:
@@ -130,8 +123,10 @@ def perfbench_table(workload: str, pairs: list[dict]) -> str:
     for n in names:
         a = [p["a"]["metrics"][n] for p in pairs]
         b = [p["b"]["metrics"][n] for p in pairs]
-        (a1, am, a3), (b1, bm, b3) = _quartiles(a), _quartiles(b)
-        wins = sum(y < x for x, y in zip(a, b))
+        a1, am, a3 = statistics.quantiles(a, n=4, method="inclusive")
+        b1, bm, b3 = statistics.quantiles(b, n=4, method="inclusive")
+        sign = -1 if n in pairs[0]["a"]["rates"] else 1
+        wins = sum(sign * (y - x) < 0 for x, y in zip(a, b))
         ratio = f"{bm / am:.3f}" if am else "-"
         rows.append(
             f"| `{n}` | {am:.4g} [{a1:.4g}, {a3:.4g}] | {bm:.4g} [{b1:.4g}, {b3:.4g}] "
@@ -146,7 +141,7 @@ def perfbench_table(workload: str, pairs: list[dict]) -> str:
 
 
 def perfbench_ab(a_root: str, b_root: str, workloads: list[str], seeds: list[int],
-                 seconds: float, json_path: str | None) -> None:
+                 seconds: float) -> None:
     roots = {"a": a_root, "b": b_root}
     pairs: dict[str, list[dict]] = {w: [] for w in workloads}
     for i, seed in enumerate(seeds):
@@ -155,13 +150,10 @@ def perfbench_ab(a_root: str, b_root: str, workloads: list[str], seeds: list[int
             pair = {"seed": seed, "order": order.upper()}
             for side in order:
                 pair[side] = run = perfbench_run(roots[side], w, seed, seconds)
-                print(f"{w} seed {seed} {side}: ok={run['ok']} wall={run['wall_s']:.1f}s "
+                print(f"{w} seed {seed} {side}: ok={run['ok']} "
                       + " ".join(f"{k}={v:.4g}" for k, v in run["metrics"].items()),
                       file=sys.stderr, flush=True)
             pairs[w].append(pair)
-    if json_path:
-        with open(json_path, "w") as f:
-            json.dump(pairs, f, indent=1)
     for w in workloads:
         ok = [p for p in pairs[w] if p["a"]["metrics"] and p["b"]["metrics"]]
         print(perfbench_table(w, ok) if ok else f"**{w}**: no pair produced metrics", end="\n\n")
@@ -185,12 +177,11 @@ def main() -> int:
     ap.add_argument("--perfbench", help="comma-separated perfbench workloads")
     ap.add_argument("--seeds", default="701-710")
     ap.add_argument("--seconds", type=float, default=5)
-    ap.add_argument("--json", help="perfbench mode: also write the raw runs here")
     ap.add_argument("queries", nargs="*")
     args = ap.parse_args()
     if args.perfbench:
         perfbench_ab(args.a, args.b, args.perfbench.split(","), _seeds(args.seeds),
-                     args.seconds, args.json)
+                     args.seconds)
     else:
         if not args.queries:
             ap.error("name at least one query, or use --perfbench")

@@ -188,10 +188,12 @@ def get_spark(app_name: str = "data_spark", shuffle_partitions: int | None = Non
     ``-XX:ArchiveClassesAtExit``, so that the JVM writes one when it
     exits (:func:`cds_options`). Mapping the archive replaces reading,
     parsing and verifying most of Spark's classes from jars: on a 4-core
-    host, after the session start and three small jobs, classes loaded
-    from jars fell from ~19,800 to ~5,600, class-loading time from 4.7 to
-    1.4 s and verification from 1.3 to 0.07 s, and the session start's
-    CPU (``setup_s`` in ``perfbench``) by 20-30%.
+    host, after the session start and perfbench's three warm-up jobs,
+    classes loaded from jars fell from ~19,850 to ~5,560 (~14,700 now
+    come from the archive), class-loading time from 4.4 to 1.3 s and
+    verification from 1.2 to 0.06 s; the process tree's CPU over those
+    steps (``setup_s`` in ``perfbench``) fell 27-29% and their wall time
+    38-41%.
     - Where: ``<tempfile.gettempdir()>/data_spark-cds/<key>.jsa``, about
       150-250 MB. The key hashes the JDK's class image and the paths,
       sizes and mtimes of Spark's jars, which the JVM checks before it
@@ -199,9 +201,10 @@ def get_spark(app_name: str = "data_spark", shuffle_partitions: int | None = Non
       one deletes the archives of other keys. ``perfbench`` sets
       ``TMPDIR``, so its archive stays under ``.perfbench/``. To clear
       it, delete that directory; the next session builds a new one.
-    - Cost: the JVM that builds the archive starts 10-25% slower in CPU
-      and spends another ~5-15 s at exit writing it, once per key and
-      temporary directory. While a live JVM is building one, other
+    - Cost: the run whose JVM builds the archive pays 15-22% more CPU
+      for its session start, 5-11% more per operation, and 3-10 s more
+      wall time, most of it writing the archive as the JVM exits; once
+      per key and temporary directory. While a live JVM is building one, other
       sessions start without sharing rather than build a second.
     - Publishing: the JVM writes to a per-process ``.part`` file, and a
       later ``get_spark`` promotes it with ``os.replace`` once no live

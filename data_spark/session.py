@@ -40,6 +40,13 @@ CDS_LOG = "-Xlog:cds*=error"
 _CDS_MAGIC = (0xF00BABA8).to_bytes(4, "little")
 
 
+def jdk_tool(name: str) -> str | None:
+    """Path of a JDK tool (``java``, ``jcmd``) found the way Spark's
+    launcher finds ``java``: under ``JAVA_HOME`` if set, else on PATH."""
+    home = os.environ.get("JAVA_HOME")
+    return os.path.join(home, "bin", name) if home else shutil.which(name)
+
+
 def _command_lines() -> list[bytes]:
     """The command line of every process this one can see."""
     out = []
@@ -107,8 +114,7 @@ def cds_options() -> str:
     :func:`get_spark`), or '' where no archive can be used or built."""
     from pyspark.find_spark_home import _find_spark_home  # noqa: PLC0415
 
-    home = os.environ.get("JAVA_HOME")
-    java = os.path.join(home, "bin", "java") if home else shutil.which("java")
+    java = jdk_tool("java")
     if java is None or not os.path.isdir("/proc"):
         return ""
     spark_home = _find_spark_home()

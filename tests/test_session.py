@@ -81,11 +81,6 @@ _MAPPED_MIN = 5_000
 _UNMAPPED_MAX = 2_500
 
 
-def _jdk_tool(name: str) -> str:
-    home = os.environ.get("JAVA_HOME")
-    return os.path.join(home, "bin", name) if home else shutil.which(name)
-
-
 def _probe(tmp: Path, conf: Path) -> tuple[dict, str]:
     """Run :data:`_PROBE` with ``tmp`` as its temporary directory (and so
     its archive directory) and ``conf`` as its Spark conf directory, which
@@ -95,7 +90,7 @@ def _probe(tmp: Path, conf: Path) -> tuple[dict, str]:
         SPARK_GRAFT_CPUS="1", SPARK_GRAFT_DRIVER_MEM="1g",
     )
     out = subprocess.run(
-        [sys.executable, "-c", _PROBE, str(ROOT), _jdk_tool("jcmd")],
+        [sys.executable, "-c", _PROBE, str(ROOT), session.jdk_tool("jcmd")],
         env=env, capture_output=True, text=True, timeout=600,
     )
     assert out.returncode == 0, out.stderr[-3000:]
@@ -149,7 +144,7 @@ def test_session_starts_without_sharing_on_a_bad_archive(built_archive, tmp_path
         with zipfile.ZipFile(jar, "w") as z:
             z.writestr("META-INF/MANIFEST.MF", "Manifest-Version: 1.0\n")
         subprocess.run(
-            [_jdk_tool("java"), f"-XX:ArchiveClassesAtExit={bad}", session.CDS_LOG,
+            [session.jdk_tool("java"), f"-XX:ArchiveClassesAtExit={bad}", session.CDS_LOG,
              "-cp", str(jar), "-version"],
             capture_output=True, check=True, timeout=120,
         )

@@ -37,9 +37,10 @@ LINE = re.compile(
 )
 
 
-def run_side(root: str, sf: str, reps: int, names: list[str]) -> dict:
+def run_side(root: str, sf: str | None, reps: int, names: list[str]) -> dict:
+    sf_args = ["--sf", sf] if sf else []  # profile_query.py's own default otherwise
     out = subprocess.run(
-        [sys.executable, "tools/profile_query.py", "--sf", sf, "--reps", str(reps)]
+        [sys.executable, "tools/profile_query.py", *sf_args, "--reps", str(reps)]
         + names,
         cwd=root, capture_output=True, text=True, timeout=3600,
     )
@@ -55,7 +56,7 @@ def run_side(root: str, sf: str, reps: int, names: list[str]) -> dict:
     return res
 
 
-def query_ab(a_root: str, b_root: str, sf: str, reps: int, rounds: int, names: list[str]) -> None:
+def query_ab(a_root: str, b_root: str, sf: str | None, reps: int, rounds: int, names: list[str]) -> None:
     rounds_out = {"a": [], "b": []}
     for r in range(rounds):
         for side, root in (("a", a_root), ("b", b_root)):
@@ -171,7 +172,7 @@ def main() -> int:
     ap = argparse.ArgumentParser(description="interleaved A/B between two checkouts")
     ap.add_argument("--a", required=True, help="checkout A (the parent)")
     ap.add_argument("--b", required=True, help="checkout B (the change)")
-    ap.add_argument("--sf", default="/root/testdata/sf0.1")
+    ap.add_argument("--sf", help="query mode: the data dir (default: profile_query.py's)")
     ap.add_argument("--reps", type=int, default=3)
     ap.add_argument("--rounds", type=int, default=2)
     ap.add_argument("--perfbench", help="comma-separated perfbench workloads")

@@ -12,6 +12,7 @@ import glob
 import hashlib
 import os
 import shutil
+import stat
 import tempfile
 
 from pyspark import SparkContext
@@ -109,9 +110,27 @@ def publish_archive(directory: str, key: str) -> bool:
     return any(building in c for c in cmdlines)
 
 
+def _private_dir(path: str) -> bool:
+    """Create ``path`` as a directory only this user can use, or check
+    that the one already there is one: a real directory (not a symlink),
+    owned by this user, that no group or other user can write. Archives
+    and the conf directory live under the shared temporary directory,
+    where another user could create the path first and plant a
+    ``spark-env.sh``, which Spark's launcher runs, or an archive, which the
+    JVM maps without verifying its classes."""
+    try:
+        os.mkdir(path, 0o700)
+    except FileExistsError:
+        pass
+    st = os.lstat(path)
+    return stat.S_ISDIR(st.st_mode) and st.st_uid == os.getuid() and not st.st_mode & 0o022
+
+
 def cds_options() -> str:
     """The class-data-sharing flags for a new driver JVM (see
-    :func:`get_spark`), or '' where no archive can be used or built."""
+    :func:`get_spark`), or '' where no archive can be used or built.
+    Points ``SPARK_CONF_DIR`` at an empty private directory when it
+    returns flags that need it, and leaves it alone otherwise."""
     from pyspark.find_spark_home import _find_spark_home  # noqa: PLC0415
 
     java = jdk_tool("java")
@@ -119,30 +138,37 @@ def cds_options() -> str:
         return ""
     spark_home = _find_spark_home()
     directory = os.path.join(tempfile.gettempdir(), "data_spark-cds")
-    default_conf = os.path.join(spark_home, "conf")
-    if "SPARK_CONF_DIR" not in os.environ and os.path.isdir(default_conf):
-        names = os.listdir(default_conf)
+    if not _private_dir(directory):
+        return ""
+    conf_dir = os.environ.get("SPARK_CONF_DIR")
+    redirect = False
+    if conf_dir is None:
+        conf_dir = os.path.join(spark_home, "conf")
+        names = os.listdir(conf_dir) if os.path.isdir(conf_dir) else []
         if names and all(n.endswith(".template") for n in names):
             # Spark reads no template, so an empty directory is the same
             # configuration without the non-empty classpath directory a
             # dump refuses
-            os.makedirs(os.path.join(directory, "conf"), exist_ok=True)
-            os.environ["SPARK_CONF_DIR"] = os.path.join(directory, "conf")
-    conf_dir = os.environ.get("SPARK_CONF_DIR", default_conf)
+            conf_dir, redirect = os.path.join(directory, "conf"), True
+            if not _private_dir(conf_dir):
+                return ""
     if os.path.isdir(conf_dir) and os.listdir(conf_dir):
         return ""
     key = _archive_key(java, spark_home, conf_dir)
     if key is None:
         return ""
-    os.makedirs(directory, exist_ok=True)
     archive = os.path.join(directory, f"{key}.jsa")
     building = publish_archive(directory, key)
     if os.path.exists(archive):
-        return f"-XX:SharedArchiveFile={archive} {CDS_LOG}"
-    if building:
+        options = f"-XX:SharedArchiveFile={archive} {CDS_LOG}"
+    elif building:
         return ""  # another JVM is building it; one dump is enough
-    part = os.path.join(directory, f"{key}-{os.getpid()}.part")
-    return f"-XX:ArchiveClassesAtExit={part} {CDS_LOG}"
+    else:
+        part = os.path.join(directory, f"{key}-{os.getpid()}.part")
+        options = f"-XX:ArchiveClassesAtExit={part} {CDS_LOG}"
+    if redirect:
+        os.environ["SPARK_CONF_DIR"] = conf_dir
+    return options
 
 
 def local_cpus() -> int:
@@ -226,7 +252,15 @@ def get_spark(app_name: str = "data_spark", shuffle_partitions: int | None = Non
       and ``$SPARK_HOME/conf`` holds only ``*.template`` files, which
       Spark never reads, ``SPARK_CONF_DIR`` is pointed at an empty
       directory beside the archives. With a non-empty conf directory
-      the JVM starts without sharing.
+      the JVM starts without sharing, and ``SPARK_CONF_DIR`` stays as
+      it was.
+    - The archive directory and that conf directory sit under the shared
+      temporary directory, so they are created with mode 0700 and used
+      only while they are real directories of this user that nobody
+      else can write (:func:`_private_dir`); otherwise the JVM starts
+      without sharing. A directory another user made first could hold a
+      ``spark-env.sh``, which Spark's launcher runs, or an archive, which
+      the JVM maps without verifying its classes.
     - ``CDS_LOG`` silences the dump's per-class warnings and keeps its
       errors.
     """

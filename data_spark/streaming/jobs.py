@@ -218,6 +218,28 @@ def _key_bucket(keys: list[str], num_buckets: int):
     return F.pmod(F.xxhash64(*[F.col(k) for k in keys]), F.lit(num_buckets)).cast("int")
 
 
+def _recover_in_root_bucket_backups(target_path: str) -> None:
+    """Undo what a crash left of the earlier bucket swap, which parked a
+    bucket's backup inside the store as ``__kb=N__bak``, a directory that
+    partition discovery reads as a bucket value: put the backup back where
+    the live bucket is missing (a crash between the swap's two renames),
+    and delete it where the live bucket exists (a crash before the
+    backup's removal)."""
+    import os
+    import shutil
+
+    if not os.path.isdir(target_path):
+        return
+    for name in os.listdir(target_path):
+        if name.startswith(f"{BUCKET_COL}=") and name.endswith("__bak"):
+            bak = os.path.join(target_path, name)
+            live = bak[: -len("__bak")]
+            if os.path.exists(live):
+                shutil.rmtree(bak)
+            else:
+                os.rename(bak, live)
+
+
 def merge_batch_into_bucketed(
     batch: DataFrame,
     target_path: str,
@@ -269,6 +291,7 @@ def merge_batch_into_bucketed(
         batch = batch.dropDuplicates(keys)
     batch = batch.withColumn(BUCKET_COL, _key_bucket(keys, num_buckets))
 
+    _recover_in_root_bucket_backups(target_path)
     recover_partitioned_root(target_path)
     # the whole output is staged in the sibling staging root, so a crash
     # leaves nothing that partition discovery would read as a bucket

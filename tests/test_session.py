@@ -6,8 +6,10 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import stat
 import subprocess
 import sys
+import tempfile
 import zipfile
 from pathlib import Path
 
@@ -131,7 +133,7 @@ def test_session_maps_the_archive(built_archive):
 def test_session_starts_without_sharing_on_a_bad_archive(built_archive, tmp_path, kind):
     built, good = built_archive
     bad = tmp_path / "data_spark-cds" / good.name
-    bad.parent.mkdir()
+    bad.parent.mkdir(mode=0o700)
     if kind == "garbage":
         bad.write_bytes(os.urandom(1 << 20))
     elif kind == "zeroed_header":
@@ -177,3 +179,57 @@ def test_publish_never_promotes_a_part_a_live_process_may_write(tmp_path):
     assert session.publish_archive(str(tmp_path), key) is False
     assert sorted(p.name for p in tmp_path.iterdir()) == [f"{key}.jsa"]
     assert (tmp_path / f"{key}.jsa").read_bytes() == finished
+
+
+@pytest.fixture
+def template_spark_home(tmp_path, monkeypatch):
+    """A Spark home whose conf directory holds only a template, as a
+    pip-installed pyspark's does, with ``tmp_path/tmp`` as the temporary
+    directory and ``SPARK_CONF_DIR`` unset; returns the archive directory."""
+    if session.jdk_tool("java") is None:
+        pytest.skip("no java")
+    home = tmp_path / "spark"
+    (home / "conf").mkdir(parents=True)
+    (home / "conf" / "spark-env.sh.template").write_text("# template\n")
+    (home / "jars").mkdir()
+    (tmp_path / "tmp").mkdir()
+    monkeypatch.setattr("pyspark.find_spark_home._find_spark_home", lambda: str(home))
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path / "tmp"))
+    monkeypatch.delenv("SPARK_CONF_DIR", raising=False)
+    return tmp_path / "tmp" / "data_spark-cds"
+
+
+def test_template_only_conf_is_redirected_to_a_private_dir(template_spark_home):
+    options = session.cds_options()
+    assert options.startswith(f"-XX:ArchiveClassesAtExit={template_spark_home}/")
+    conf = template_spark_home / "conf"
+    assert os.environ["SPARK_CONF_DIR"] == str(conf)
+    for d in (template_spark_home, conf):
+        assert stat.S_IMODE(d.stat().st_mode) & 0o077 == 0
+    assert list(conf.iterdir()) == []
+
+
+@pytest.mark.parametrize(
+    "kind", ["conf_not_empty", "conf_writable_by_others", "dir_writable_by_others",
+             "dir_of_another_user", "dir_is_a_symlink"],
+)
+def test_no_sharing_from_a_dir_another_user_may_have_made(template_spark_home, monkeypatch, kind):
+    cds = template_spark_home
+    if kind == "dir_is_a_symlink":
+        target = cds.parent / "elsewhere"
+        target.mkdir(mode=0o700)
+        cds.symlink_to(target)
+    else:
+        cds.mkdir(mode=0o700)
+        (cds / "conf").mkdir(mode=0o700)
+    if kind == "conf_not_empty":
+        (cds / "conf" / "spark-env.sh").write_text("echo planted\n")
+    elif kind == "conf_writable_by_others":
+        (cds / "conf").chmod(0o777)
+    elif kind == "dir_writable_by_others":
+        cds.chmod(0o777)
+    elif kind == "dir_of_another_user":
+        uid = os.getuid()
+        monkeypatch.setattr(os, "getuid", lambda: uid + 1)
+    assert session.cds_options() == ""
+    assert "SPARK_CONF_DIR" not in os.environ

@@ -258,6 +258,40 @@ def test_merge_sink_recovers_a_bucket_swap_that_crashed(spark, tmp_path, monkeyp
     )
 
 
+def test_merge_sink_recovers_in_root_backups_of_the_earlier_swap(spark, tmp_path):
+    """The bucket swap used before parked a backup inside the store as
+    ``__kb=N__bak``. A store a crash left like that, one bucket moved to
+    its backup and another's backup not yet deleted, merges and reads
+    again: the backup is restored or dropped, ``__kb`` stays an int and
+    every key keeps its newest version."""
+    import shutil
+
+    from data_spark.streaming.jobs import BUCKET_COL, _key_bucket, merge_batch_into_bucketed
+
+    target = str(tmp_path / "legacy_target")
+    schema = "k bigint, ver bigint, v string"
+    bucket = dict(spark.range(40).select("id", _key_bucket(["id"], 4)).collect())
+    base = [(k, 1, f"base{k}") for k in range(40)]
+    batch = [(k, 2, f"b_{k}") for k in range(0, 40, 5) if bucket[k] != 1]
+    merge_batch_into_bucketed(
+        spark.createDataFrame(base, schema), target, keys=["k"], order_col="ver", num_buckets=4
+    )
+    live = os.path.join(target, f"{BUCKET_COL}=")
+    os.rename(f"{live}1", f"{live}1__bak")  # crashed between the renames
+    shutil.copytree(f"{live}2", f"{live}2__bak")  # crashed before the backup's removal
+
+    merge_batch_into_bucketed(
+        spark.createDataFrame(batch, schema), target, keys=["k"], order_col="ver", num_buckets=4
+    )
+    out = spark.read.parquet(target)
+    assert dict(out.dtypes)[BUCKET_COL] == "int"
+    assert sorted(n for n in os.listdir(target) if n.startswith(f"{BUCKET_COL}=")) == [
+        f"{BUCKET_COL}={i}" for i in range(4)
+    ]
+    want = {k: (ver, v) for k, ver, v in base + batch}
+    assert {r["k"]: (r["ver"], r["v"]) for r in out.collect()} == want
+
+
 def test_streaming_dedup_across_batches(spark, tmp_path):
     from data_spark.streaming.stateful import streaming_dedup
 

@@ -10,23 +10,30 @@ Reports per side: min of the per-round min-warm values, plus every raw
 round, and the first round's jobs/run. Output JSON on stdout.
 
     python tools/ab_interleaved.py --a PARENT --b CHANGE \
-        --perfbench query_mix,incremental_load --seeds 701-710 [--seconds 5]
+        --perfbench query_mix,incremental_load --seeds 701-710 [--seconds 5] \
+        [--fresh-archive]
 
 Perfbench mode: for each seed and workload, one ``perfbench/run.py
---trace 0`` run in each checkout, A first on even-numbered seeds and B
-first on odd ones (A is the parent). Prints a markdown table per
-workload: for every end-to-end and report metric, each side's median
-and quartiles, how many pairs B won (higher is better for a rate, a
-unit ``1/...``, lower for every other metric; ties count for neither
-side) and whether the gap between the medians exceeds A's
-interquartile range, then every run.
+--trace 0`` run in each checkout, A first on the even-indexed seeds
+(the first, third, ...) and B first on the others (A is the parent).
+Prints a markdown table per workload: for every end-to-end and report
+metric, each side's median and quartiles, how many of all the pairs run
+B won (higher is better for a rate, a unit ``1/...``, lower for every
+other metric; ties count for neither side, and so does a pair in which
+either run printed no result) and whether the gap between the medians
+exceeds A's interquartile range, then every run and the pairs that
+produced no result. ``--fresh-archive`` deletes B's class-data-sharing
+archives (perfbench's ``.perfbench/tmp/data_spark-cds``) before each of
+B's runs, so every B run is one that builds the archive.
 """
 
 from __future__ import annotations
 
 import argparse
 import json
+import os
 import re
+import shutil
 import statistics
 import subprocess
 import sys
@@ -110,13 +117,25 @@ def perfbench_run(root: str, workload: str, seed: int, seconds: float) -> dict:
             "rates": [k for k, v in found.items() if v["unit"].startswith("1/")]}
 
 
+def _quartiles(v: list[float]) -> list[float]:
+    """q1, median, q3 (one value is its own quartiles)."""
+    return statistics.quantiles(v, n=4, method="inclusive") if len(v) > 1 else v * 3
+
+
 def perfbench_table(workload: str, pairs: list[dict]) -> str:
-    """Markdown summary and per-run rows of one workload's pairs."""
+    """Markdown summary and per-run rows of one workload's pairs. Medians
+    and quartiles come from the pairs in which both runs printed a result;
+    wins and passed checks are counted out of every pair run."""
+    run = len(pairs)
+    passed = {s: sum(p[s]["ok"] for p in pairs) for s in "ab"}
+    dropped = [p for p in pairs if not (p["a"]["metrics"] and p["b"]["metrics"])]
+    pairs = [p for p in pairs if p not in dropped]
+    if not pairs:
+        return f"**{workload}**: no pair of {run} produced metrics on both sides"
     names = [n for n in pairs[0]["a"]["metrics"] if n != "error_rate"]
     rows = [
-        f"**{workload}** ({len(pairs)} pairs; A = parent, B = change; "
-        f"checks passed A {sum(p['a']['ok'] for p in pairs)}, "
-        f"B {sum(p['b']['ok'] for p in pairs)})",
+        f"**{workload}** ({run} pairs, {len(dropped)} without a result; A = parent, "
+        f"B = change; checks passed A {passed['a']}/{run}, B {passed['b']}/{run})",
         "",
         "| metric | A median [q1, q3] | B median [q1, q3] | B/A | B wins | gap > A IQR |",
         "|---|---|---|---|---|---|",
@@ -124,25 +143,28 @@ def perfbench_table(workload: str, pairs: list[dict]) -> str:
     for n in names:
         a = [p["a"]["metrics"][n] for p in pairs]
         b = [p["b"]["metrics"][n] for p in pairs]
-        a1, am, a3 = statistics.quantiles(a, n=4, method="inclusive")
-        b1, bm, b3 = statistics.quantiles(b, n=4, method="inclusive")
+        a1, am, a3 = _quartiles(a)
+        b1, bm, b3 = _quartiles(b)
         sign = -1 if n in pairs[0]["a"]["rates"] else 1
         wins = sum(sign * (y - x) < 0 for x, y in zip(a, b))
         ratio = f"{bm / am:.3f}" if am else "-"
         rows.append(
             f"| `{n}` | {am:.4g} [{a1:.4g}, {a3:.4g}] | {bm:.4g} [{b1:.4g}, {b3:.4g}] "
-            f"| {ratio} | {wins}/{len(pairs)} | {'yes' if abs(bm - am) > a3 - a1 else 'no'} |"
+            f"| {ratio} | {wins}/{run} | {'yes' if abs(bm - am) > a3 - a1 else 'no'} |"
         )
     rows += ["", "| seed | order | " + " | ".join(f"`{n}` A / B" for n in names) + " |",
              "|---|---|" + "---|" * len(names)]
     for p in pairs:
         cells = [f"{p['a']['metrics'][n]:.4g} / {p['b']['metrics'][n]:.4g}" for n in names]
         rows.append(f"| {p['seed']} | {p['order']} | " + " | ".join(cells) + " |")
+    for p in dropped:
+        sides = ", ".join(s.upper() for s in "ab" if not p[s]["metrics"])
+        rows.append(f"| {p['seed']} | {p['order']} | no result from {sides} |")
     return "\n".join(rows)
 
 
 def perfbench_ab(a_root: str, b_root: str, workloads: list[str], seeds: list[int],
-                 seconds: float) -> None:
+                 seconds: float, fresh_archive: bool = False) -> None:
     roots = {"a": a_root, "b": b_root}
     pairs: dict[str, list[dict]] = {w: [] for w in workloads}
     for i, seed in enumerate(seeds):
@@ -150,14 +172,16 @@ def perfbench_ab(a_root: str, b_root: str, workloads: list[str], seeds: list[int
         for w in workloads:
             pair = {"seed": seed, "order": order.upper()}
             for side in order:
+                if side == "b" and fresh_archive:
+                    shutil.rmtree(os.path.join(b_root, ".perfbench", "tmp", "data_spark-cds"),
+                                  ignore_errors=True)
                 pair[side] = run = perfbench_run(roots[side], w, seed, seconds)
                 print(f"{w} seed {seed} {side}: ok={run['ok']} "
                       + " ".join(f"{k}={v:.4g}" for k, v in run["metrics"].items()),
                       file=sys.stderr, flush=True)
             pairs[w].append(pair)
     for w in workloads:
-        ok = [p for p in pairs[w] if p["a"]["metrics"] and p["b"]["metrics"]]
-        print(perfbench_table(w, ok) if ok else f"**{w}**: no pair produced metrics", end="\n\n")
+        print(perfbench_table(w, pairs[w]), end="\n\n")
 
 
 def _seeds(spec: str) -> list[int]:
@@ -178,11 +202,13 @@ def main() -> int:
     ap.add_argument("--perfbench", help="comma-separated perfbench workloads")
     ap.add_argument("--seeds", default="701-710")
     ap.add_argument("--seconds", type=float, default=5)
+    ap.add_argument("--fresh-archive", action="store_true",
+                    help="perfbench mode: delete B's class-data-sharing archives before each B run")
     ap.add_argument("queries", nargs="*")
     args = ap.parse_args()
     if args.perfbench:
         perfbench_ab(args.a, args.b, args.perfbench.split(","), _seeds(args.seeds),
-                     args.seconds)
+                     args.seconds, args.fresh_archive)
     else:
         if not args.queries:
             ap.error("name at least one query, or use --perfbench")

@@ -233,10 +233,15 @@ def get_spark(app_name: str = "data_spark", shuffle_partitions: int | None = Non
       one deletes the archives of other keys. ``perfbench`` sets
       ``TMPDIR``, so its archive stays under ``.perfbench/``. To clear
       it, delete that directory; the next session builds a new one.
-    - Cost: the run whose JVM builds the archive pays 15-22% more CPU
-      for its session start, 5-11% more per operation, and 3-10 s more
-      wall time, most of it writing the archive as the JVM exits; once
-      per key and temporary directory. While a live JVM is building one, other
+    - Cost: the run whose JVM builds the archive pays 16-19% more CPU
+      for its session start (``setup_s`` medians over 10 pairs, single
+      pairs up to 24%), 0-5% more per operation, ~1.9 s more start-up
+      wall time and 3-10 s more as the JVM exits and writes the
+      archive; once per key and temporary directory. So only a caller
+      whose temporary directory outlives a run gains: perfbench keeps
+      it inside the checkout, tools and tests use ``/tmp``, and a
+      caller that starts every run with an empty one pays this cost
+      each time. While a live JVM is building an archive, other
       sessions start without sharing rather than build a second.
     - Publishing: the JVM writes to a per-process ``.part`` file, and a
       later ``get_spark`` promotes it with ``os.replace`` once no live

@@ -7,11 +7,12 @@ download/unzip → per-schema BigQuery loads → master builds → view layer
   raw files → schema'd reads → masters (validated write) → classified
   view → document assembly → incremental keyed sink → graph tables
 
-``run_bulk_import`` reads the landed pipe-delimited files with explicit
-schemas and validated-overwrites each table (S3+S4: count-checked swap,
-rollback on shrink). ``run_derivations`` builds masters/views/docs/graph
-and writes them partitioned. ``run_incremental_docs`` drains the doc
-sink through the processed log exactly once per key.
+``run_bulk_import`` reads the landed pipe-delimited ``.txt`` and headed
+``.csv`` files with explicit schemas and validated-overwrites each table
+(S3+S4: count-checked swap, rollback on shrink). ``run_derivations``
+builds masters/views/docs/graph and writes them partitioned.
+``run_incremental_docs`` drains the doc sink through the processed log
+exactly once per key.
 """
 
 from __future__ import annotations
@@ -36,21 +37,26 @@ from data_spark.fec.master import (
 )
 from data_spark.fec.views import contributions_elastic, pas_elastic
 from data_spark.graph.fec import contribution_graph
-from data_spark.io import read_pipe_delimited, validated_overwrite
+from data_spark.io import read_headed_csv, read_pipe_delimited, validated_overwrite
 from data_spark.streaming.incremental import ProcessedLog, incremental_batches
 
 
 def run_bulk_import(spark: SparkSession, landing_dir: str, out_dir: str) -> dict[str, int]:
-    """Load every landed ``<prefix>.txt`` with its declared schema and
-    validated-overwrite it to ``out_dir/<prefix>`` parquet. Returns
+    """Load every landed ``<prefix>.csv`` (header row, quoted) or
+    ``<prefix>.txt`` (pipe-delimited, unquoted) with its declared schema
+    and validated-overwrite it to ``out_dir/<prefix>`` parquet. Returns
     per-table row counts. Missing files are skipped (the reference
     enqueues whichever of the 13 files arrived)."""
     counts = {}
     for prefix, schema in schemas.BY_PREFIX.items():
-        path = os.path.join(landing_dir, f"{prefix}.txt")
-        if not os.path.exists(path):
+        csv_path = os.path.join(landing_dir, f"{prefix}.csv")
+        txt_path = os.path.join(landing_dir, f"{prefix}.txt")
+        if os.path.exists(csv_path):
+            df = read_headed_csv(spark, csv_path, schema)
+        elif os.path.exists(txt_path):
+            df = read_pipe_delimited(spark, txt_path, schema)
+        else:
             continue
-        df = read_pipe_delimited(spark, path, schema)
         counts[prefix] = validated_overwrite(df, os.path.join(out_dir, prefix))
     return counts
 

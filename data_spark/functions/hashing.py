@@ -57,18 +57,6 @@ def token_shingles(col: Column, width: int = 4) -> Column:
     return char_shingles(_normalize(col), width)
 
 
-def word_shingles(col: Column, width: int = 3) -> Column:
-    """Array of word ``width``-grams (n-gram Jaccard dedup unit)."""
-    words = F.split(F.trim(F.regexp_replace(F.lower(col), r"[^a-z0-9 ]+", " ")), r"\s+")
-    n = F.greatest(F.size(words) - F.lit(width - 1), F.lit(1))
-    return F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(0), n - 1),
-            lambda i: F.array_join(F.slice(words, i + 1, width), " "),
-        )
-    )
-
-
 def minhash_signature(shingles: Column, num_hashes: int = 64) -> Column:
     """k-permutation MinHash signature: ``array<bigint>`` of length
     ``num_hashes``. Hash family = xxhash64 over the shingle prefixed

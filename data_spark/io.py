@@ -71,14 +71,6 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def register_testdata(spark: SparkSession, sf_dir: str) -> None:
-    """Register every testdata table as a temp view for spark.sql use."""
-    for name in TESTDATA_TABLES:
-        path = os.path.join(sf_dir, f"{name}.parquet")
-        if os.path.exists(path):
-            spark.read.parquet(path).createOrReplaceTempView(name)
-
-
 def read_pipe_delimited(
     spark: SparkSession, path: str, schema: StructType, header: bool = False
 ) -> DataFrame:

@@ -57,12 +57,6 @@ def ngrams_from_words(words: Column, n: int = 3) -> Column:
     )
 
 
-def word_ngrams(text: Column, n: int = 3) -> Column:
-    """Distinct word n-grams of raw text (convenience form — hot paths
-    materialize the token array first, see ngram_jaccard_pairs)."""
-    return ngrams_from_words(_words(text), n)
-
-
 def ngram_jaccard_pairs(
     df: DataFrame,
     text_col: str = "text",

@@ -43,17 +43,6 @@ def suffix_containment_join(
     return joined
 
 
-def anti_join(df: DataFrame, done: DataFrame, on: str | list[str]) -> DataFrame:
-    """New-rows-only anti-join (SURVEY J3: the incremental `LEFT JOIN
-    loaded_x WHERE b.id IS NULL` pattern)."""
-    return df.join(done, on=on, how="left_anti")
-
-
-def semi_join(df: DataFrame, keys: DataFrame, on: str | list[str]) -> DataFrame:
-    """Key-set membership (SURVEY J8: es.exists probes, batched)."""
-    return df.join(keys, on=on, how="left_semi")
-
-
 def as_of_join(
     left: DataFrame,
     right: DataFrame,

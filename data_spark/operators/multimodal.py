@@ -1,22 +1,17 @@
-"""Multimodal column plumbing: image/audio/video as opaque ``binary``
-payloads with typed metadata, processed via Arrow-batched mapInPandas.
+"""Binary payload columns: opaque ``binary`` payloads with typed
+metadata, expanded via Arrow-batched mapInPandas.
 
-The heavyweight decoders (PIL/ffmpeg/torchaudio) are not in this
-container, so the decode step has three tiers: ``decode_mode='strict'``
-uses a real ``PIL`` import when present, falls back to the vendored
-pure-stdlib PNG codec (operators/png.py) for PNG payloads — so strict
-mode decodes REAL image bytes even here — and raises the honest
-NotImplementedError only for non-PNG payloads without Pillow (the
-production hook point); ``'fake'`` produces a deterministic
-payload-derived stand-in so the Spark-side plumbing — schema, batch
-iteration, partitioning, feature join-back — is real and tested
-end-to-end in any environment.
+Nothing here decodes media. ``sample_frames`` expands each payload into
+per-frame rows whose count, timestamps and bytes are deterministic
+functions of the payload, so the Spark-side plumbing (schema, batch
+iteration, 1:N expansion, partitioning) is real and oracle-checked
+while the frames themselves are content-derived stand-ins.
 
 Scale notes: payloads never pass through Python row-at-a-time — they
 arrive in Arrow record batches; ``spark.sql.execution.arrow.
 maxRecordsPerBatch`` bounds batch memory (set it low for multi-MB
-payload columns). Feature extraction repartitions first so a few huge
-files can't serialize the job (binary payload skew).
+payload columns). Frame sampling repartitions first so a few huge
+payloads can't serialize the job (binary payload skew).
 """
 
 from __future__ import annotations
@@ -27,42 +22,15 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    ArrayType, BinaryType, FloatType, LongType, StringType, StructField, StructType,
-)
+from pyspark.sql.types import BinaryType, LongType, StructField, StructType
 
-#: canonical multimodal row: opaque payload + typed metadata
-MEDIA_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType()),
-        StructField("payload", BinaryType()),
-        StructField(
-            "meta",
-            StructType(
-                [
-                    StructField("mime", StringType()),
-                    StructField("source", StringType()),
-                    StructField("nbytes", LongType()),
-                ]
-            ),
-        ),
-    ]
-)
-
-FEATURE_DIM = 16
-
-_FEATURE_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType()),
-        StructField("nbytes", LongType()),
-        StructField("sha256", StringType()),
-        StructField("features", ArrayType(FloatType())),
-    ]
-)
+#: milliseconds between sampled frames
+FRAME_INTERVAL_MS = 40
 
 
 def wrap_binary(df: DataFrame, payload_col: str, id_col: str, source_col: str, mime: str) -> DataFrame:
-    """Normalize any binary column into the canonical MEDIA_SCHEMA shape."""
+    """Normalize any binary column into the canonical media row:
+    ``media_id long, payload binary, meta struct<mime, source, nbytes>``."""
     return df.select(
         F.col(id_col).cast("long").alias("media_id"),
         F.col(payload_col).alias("payload"),
@@ -72,156 +40,6 @@ def wrap_binary(df: DataFrame, payload_col: str, id_col: str, source_col: str, m
             F.octet_length(F.col(payload_col)).cast("long").alias("nbytes"),
         ).alias("meta"),
     )
-
-
-def _pil():
-    """Import PIL.Image at call time (executors import lazily; the
-    driver environment may differ). Returns the module or None."""
-    try:
-        from PIL import Image  # noqa: PLC0415
-    except ImportError:
-        return None
-    return Image
-
-
-def _decode(payload: bytes, mode: str) -> bytes:
-    if mode == "strict":
-        image_mod = _pil()
-        if image_mod is not None:
-            import io  # noqa: PLC0415
-
-            with image_mod.open(io.BytesIO(payload)) as im:
-                return im.convert("RGB").tobytes()
-        from data_spark.operators import bmp, gif, jpeg, png  # noqa: PLC0415
-
-        if png.is_png(payload):
-            _w, _h, rgb = png.decode_rgb(payload)
-            return rgb
-        if gif.is_gif(payload):
-            _w, _h, rgb = gif.decode_rgb(payload)
-            return rgb
-        if bmp.is_bmp(payload):
-            _w, _h, rgb = bmp.decode_rgb(payload)
-            return rgb
-        if jpeg.is_jpeg(payload):
-            _w, _h, rgb = jpeg.decode_rgb(payload)
-            return rgb
-        raise NotImplementedError(
-            "decode_mode='strict' without Pillow supports only PNG, GIF, "
-            "BMP and baseline JPEG payloads (vendored codecs, "
-            "operators/png.py + gif.py + bmp.py + jpeg.py); install Pillow "
-            "for other formats or use decode_mode='fake' for the "
-            "deterministic stand-in"
-        )
-    # 'fake': deterministic payload-derived pseudo-decode
-    return hashlib.sha256(payload).digest()
-
-
-def extract_features(df: DataFrame, decode_mode: str = "fake") -> DataFrame:
-    """payload → (nbytes, sha256, FEATURE_DIM float features) via
-    mapInPandas. With the stub decoder, features are a deterministic
-    function of content bytes — stable across runs/partitionings."""
-    parallelism = df.sparkSession.sparkContext.defaultParallelism
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = pdf["payload"]
-            decoded = [None if p is None else _decode(bytes(p), decode_mode) for p in payloads]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "nbytes": [0 if p is None else len(bytes(p)) for p in payloads],
-                    "sha256": [
-                        None if p is None else hashlib.sha256(bytes(p)).hexdigest()
-                        for p in payloads
-                    ],
-                    "features": [
-                        None
-                        if d is None
-                        else [b / 255.0 for b in d[:FEATURE_DIM]]
-                        for d in decoded
-                    ],
-                }
-            )
-
-    return df.repartition(parallelism).mapInPandas(batches, _FEATURE_SCHEMA)
-
-
-_RESIZE_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType()),
-        StructField("width", LongType()),
-        StructField("height", LongType()),
-        StructField("payload", BinaryType()),
-    ]
-)
-
-
-def resize_images(
-    df: DataFrame, width: int, height: int, decode_mode: str = "fake"
-) -> DataFrame:
-    """payload → resized payload at (width, height) via mapInPandas.
-
-    ``strict`` does a REAL decode + resize (PNG-encoded output) — via
-    Pillow when importable, else the vendored PNG codec (nearest-
-    neighbor resample, deterministic) for PNG payloads, raising the
-    honest NotImplementedError only for non-PNG bytes without Pillow;
-    ``fake`` emits a deterministic stand-in payload derived
-    from (content bytes, target dims) so downstream plumbing — schema,
-    dedup on resized bytes, write — is exercised for real in any
-    environment. One Arrow batch in, one out; output payload size is
-    bounded by the target dims, so batch memory is predictable
-    regardless of input skew.
-    """
-    parallelism = df.sparkSession.sparkContext.defaultParallelism
-
-    def resize_one(raw: bytes) -> bytes:
-        image_mod = _pil()
-        if decode_mode == "strict" and image_mod is not None:
-            import io  # noqa: PLC0415
-
-            with image_mod.open(io.BytesIO(raw)) as im:
-                out = io.BytesIO()
-                im.convert("RGB").resize((width, height)).save(out, format="PNG")
-                return out.getvalue()
-        if decode_mode == "strict":
-            from data_spark.operators import bmp, gif, png  # noqa: PLC0415
-
-            decoded_rgb = None
-            if png.is_png(raw):
-                decoded_rgb = png.decode_rgb(raw)
-            elif gif.is_gif(raw):
-                decoded_rgb = gif.decode_rgb(raw)
-            elif bmp.is_bmp(raw):
-                decoded_rgb = bmp.decode_rgb(raw)
-            if decoded_rgb is not None:
-                # decode, resize, re-encode as PNG (the pipeline's
-                # normalized strict output format)
-                w0, h0, rgb = decoded_rgb
-                return png.encode_rgb(
-                    width, height, png.resize_rgb_nearest(w0, h0, rgb, width, height)
-                )
-        decoded = _decode(raw, decode_mode)  # raises in strict w/o Pillow
-        seed = hashlib.sha256(decoded + f":{width}x{height}".encode()).digest()
-        # fake "pixels": repeat the seed to the target byte budget
-        budget = width * height  # 1 byte/px stand-in
-        return (seed * (budget // len(seed) + 1))[:budget]
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out_payloads = [
-                None if p is None else resize_one(bytes(p)) for p in pdf["payload"]
-            ]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "width": [width] * len(pdf),
-                    "height": [height] * len(pdf),
-                    "payload": out_payloads,
-                }
-            )
-
-    return df.repartition(parallelism).mapInPandas(batches, _RESIZE_SCHEMA)
 
 
 _FRAME_SCHEMA = StructType(
@@ -234,61 +52,32 @@ _FRAME_SCHEMA = StructType(
 )
 
 
-def sample_frames(
-    df: DataFrame, frame_interval_ms: int = 40, decode_mode: str = "fake"
-) -> DataFrame:
-    """Video payload → one row per sampled frame (1:N mapInPandas
-    expansion — the batch-shape case the scalar ops don't cover).
+def sample_frames(df: DataFrame) -> DataFrame:
+    """Payload → one row per sampled frame (1:N mapInPandas expansion —
+    the batch-shape case the scalar ops don't cover).
 
-    ``strict`` runs REAL video bytes through the vendored pure-stdlib
-    AVI codec (operators/avi.py — BI_RGB 24-bit subset): frames are
-    decoded to packed top-down RGB, ``frame_idx`` is the native frame
-    number, ``frame_ts_ms`` the sampling-grid target time, and the grid
-    picks the frame whose presentation window covers each
-    ``k·frame_interval_ms`` instant (avi.sample_frame_indices — pinned
-    by pure-function tests). Non-AVI payloads raise the honest
-    NotImplementedError, the production ffmpeg hook point.
-
-    ``fake``: frame count is a deterministic function of payload size
+    Frame count is a deterministic function of payload size
     (``2 + nbytes % 3`` — stands in for duration/interval), timestamps
-    are ``frame_idx * frame_interval_ms``, frame bytes are
-    content-derived. The (media_id, frame_idx, frame_ts_ms) skeleton is
-    therefore exactly oracle-checkable even though payloads are stubs.
+    are ``frame_idx * FRAME_INTERVAL_MS``, and frame ``i``'s bytes are
+    ``sha256(sha256(payload) + bytes([i]))``. The (media_id, frame_idx,
+    frame_ts_ms) skeleton is therefore exactly oracle-checkable. Null
+    payloads yield no frames.
     """
     parallelism = df.sparkSession.sparkContext.defaultParallelism
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from data_spark.operators import avi  # noqa: PLC0415
-
         for pdf in it:
             ids, idxs, tss, frames = [], [], [], []
             for mid, p in zip(pdf["media_id"], pdf["payload"]):
                 if p is None:
                     continue
                 raw = bytes(p)
-                if decode_mode == "strict":
-                    if not avi.is_avi(raw):
-                        raise NotImplementedError(
-                            "decode_mode='strict' supports only BI_RGB AVI payloads "
-                            "(vendored codec, operators/avi.py); use decode_mode="
-                            "'fake' for the deterministic stand-in"
-                        )
-                    _w, _h, native_ms, decoded_frames = avi.decode_frames(raw)
-                    for idx, ts in avi.sample_frame_indices(
-                        len(decoded_frames), native_ms, frame_interval_ms
-                    ):
-                        ids.append(mid)
-                        idxs.append(idx)
-                        tss.append(ts)
-                        frames.append(decoded_frames[idx][2])
-                    continue
-                decoded = _decode(raw, decode_mode)
-                n_frames = 2 + len(raw) % 3
-                for i in range(n_frames):
+                digest = hashlib.sha256(raw).digest()
+                for i in range(2 + len(raw) % 3):
                     ids.append(mid)
                     idxs.append(i)
-                    tss.append(i * frame_interval_ms)
-                    frames.append(hashlib.sha256(decoded + bytes([i])).digest())
+                    tss.append(i * FRAME_INTERVAL_MS)
+                    frames.append(hashlib.sha256(digest + bytes([i])).digest())
             yield pd.DataFrame(
                 {"media_id": ids, "frame_idx": idxs, "frame_ts_ms": tss, "frame": frames}
             )

@@ -133,26 +133,12 @@ def ivf_topk(
     )
 
 
-def _hyperplane_signs(dim: int, num_planes: int) -> list[list[float]]:
-    """Deterministic pseudo-random ±1 hyperplane patterns, computed ONCE
-    in Python (sha256 of (plane, dim-index)) — reproducible across
-    runs/engines with no stored model."""
-    import hashlib
-
-    return [
-        [
-            1.0 if hashlib.sha256(f"{p}:{i}".encode()).digest()[0] % 2 == 0 else -1.0
-            for i in range(dim)
-        ]
-        for p in range(num_planes)
-    ]
-
-
 def _plane_matrix(spark, dim: int, num_planes: int) -> DataFrame:
     """(plane, index, ±1 sign) hyperplane matrix generated ENTIRELY
-    JVM-side: spark.range + native sha2 reproduces
-    ``_hyperplane_signs`` bit-for-bit (first digest byte parity of
-    "p:i") without serializing dim·planes rows from the driver —
+    JVM-side: the sign is +1 when the first byte of sha256("p:i") is
+    even, so the patterns are reproducible across runs/engines with no
+    stored model. spark.range + native sha2 builds it without
+    serializing dim·planes rows from the driver —
     createDataFrame of the same matrix measured 1.3 s of pure driver
     overhead, and would bottleneck outright at larger plane counts."""
     p = (F.col("id") / dim).cast("int")
@@ -256,33 +242,6 @@ def _rh_band_table(
             ),
         )
     )
-
-
-def _rh_signature(vec: Column, dim: int, num_planes: int) -> Column:
-    """Random-hyperplane signature as a bit-string.
-
-    The sign patterns are embedded as LITERAL arrays: they depend only
-    on (plane, index), and an earlier per-row formulation (xxhash64
-    inside a transform lambda) was rebuilt for every row because
-    constant folding does not reach inside higher-order-function
-    lambdas — turning an O(rows·dim) signature into
-    O(rows·planes·dim) hash calls.
-    """
-    planes = _hyperplane_signs(dim, num_planes)
-
-    def bit(signs: list[float]) -> Column:
-        proj = F.aggregate(
-            F.zip_with(
-                vec,
-                F.array(*[F.lit(s) for s in signs]),
-                lambda x, s: x * s,
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-        return F.when(proj >= 0, F.lit("1")).otherwise(F.lit("0"))
-
-    return F.concat(*[bit(p) for p in planes])
 
 
 def embedding_near_duplicate_pairs(

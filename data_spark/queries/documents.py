@@ -552,10 +552,9 @@ def d_curation_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def mm_binary_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multimodal plumbing check: opaque binary payload column + typed
-    metadata rollup. Text bytes stand in for image/audio payloads; the
-    decode stage itself is the stubbed pandas-UDF in
-    data_spark.operators.multimodal (libs not in container)."""
+    """Binary payload check: opaque binary payload column + typed
+    metadata rollup. The documents' UTF-8 text bytes are the payloads;
+    nothing is decoded (see data_spark.operators.multimodal)."""
     d = t(spark, sf_dir, "documents")
     payload = F.encode(F.col("text"), "UTF-8")
     return d.select("source", F.octet_length(payload).alias("nbytes")).groupBy("source").agg(
@@ -575,8 +574,8 @@ def mm_binary_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def mm_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Frame sampling plumbing: 1:N mapInPandas expansion of each binary
-    payload into per-frame rows. Frame bytes are stubbed
-    (content-derived), but the (media_id, frame_idx, frame_ts_ms)
+    payload into per-frame rows. Frame bytes are content-derived
+    stand-ins, but the (media_id, frame_idx, frame_ts_ms)
     skeleton is deterministic — nbytes-driven frame count — so the
     expansion itself is exactly oracle-checked."""
     from data_spark.operators.multimodal import sample_frames, wrap_binary

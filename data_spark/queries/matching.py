@@ -17,9 +17,7 @@ All queries here carry exact DuckDB oracles.
 
 from __future__ import annotations
 
-import hashlib
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F

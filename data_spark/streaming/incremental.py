@@ -21,7 +21,6 @@ import os
 from collections.abc import Callable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 
 class ProcessedLog:
@@ -78,12 +77,3 @@ def incremental_batches(
         batch.unpersist()
         batches += 1
         yield n
-
-
-def high_watermark_filter(source: DataFrame, ts_col: str, lookback_expr: str) -> DataFrame:
-    """`ts > max(ts) - interval` incremental scan (SURVEY §2.9 marker
-    pattern, news_articles_ingest_queue_duplicates/main.py:29-33)."""
-    wm = source.agg(F.max(ts_col).alias("m")).select(
-        (F.col("m") - F.expr(lookback_expr)).alias("wm")
-    )
-    return source.join(F.broadcast(wm)).filter(F.col(ts_col) > F.col("wm")).drop("wm")

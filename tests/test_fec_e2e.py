@@ -86,6 +86,46 @@ def test_fec_end_to_end(spark, landing, tmp_path_factory):
     assert run_incremental_expenditure_docs(spark, out, batch_size=10) == 0
 
 
+def test_bulk_import_reads_headed_csv_with_quoting(spark, tmp_path):
+    """A landed ``<prefix>.csv`` is read with its header row and standard
+    quoting: a quoted comma stays inside its field, a doubled quote is
+    one literal quote, and an empty field is NULL."""
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    (landing / "ElectioneeringComm.csv").write_text(
+        "candidate_id,candidate_name,candidate_office,candidate_state,"
+        "candidate_office_district,committee_id,committee_name,sb_image_num,"
+        "payee_name,payee_street,payee_city,payee_state,disbursement_description,"
+        "disbursement_date,communication_date,public_distribution_date,"
+        "reported_disbursement_amount,number_of_candidates,"
+        "calculated_candidate_share\n"
+        'H001,"SMITH, JANE",H,CA,01,C001,"FRIENDS OF ""JANE""",SB1,'
+        '"ACME MEDIA, INC.",1 MAIN ST,CITY,CA,TV ADS,1/2/2022,1/3/2022,,'
+        "10000.5,2,5000.25\n"
+        "S002,DOE JOHN,S,NY,,C002,PLAIN PAC,SB2,PAYEE,2 ELM ST,TOWN,NY,"
+        "RADIO,2/3/2022,2/4/2022,2/5/2022,300,1,300\n"
+    )
+    out = str(tmp_path / "out")
+    assert run_bulk_import(spark, str(landing), out) == {"ElectioneeringComm": 2}
+    rows = {
+        r["candidate_id"]: r.asDict()
+        for r in spark.read.parquet(os.path.join(out, "ElectioneeringComm")).collect()
+    }
+    first = rows["H001"]
+    assert first["candidate_name"] == "SMITH, JANE"
+    assert first["committee_name"] == 'FRIENDS OF "JANE"'
+    assert first["payee_name"] == "ACME MEDIA, INC."
+    assert first["public_distribution_date"] is None
+    assert first["reported_disbursement_amount"] == 10000.5
+    assert first["number_of_candidates"] == 2
+    assert first["calculated_candidate_share"] == 5000.25
+    second = rows["S002"]
+    assert second["candidate_name"] == "DOE JOHN"
+    assert second["candidate_office_district"] is None
+    assert second["public_distribution_date"] == "2/5/2022"
+    assert second["reported_disbursement_amount"] == 300.0
+
+
 def test_validated_overwrite_rolls_back(spark, tmp_path):
     big = spark.range(0, 100)
     path = str(tmp_path / "tbl")

@@ -10,13 +10,13 @@ staging-write → count-validate → atomic-swap writer.
 
 from __future__ import annotations
 
+import datetime
 import decimal
 import errno
 import functools
 import logging
 import math
 import os
-import re
 import shutil
 import time
 import uuid
@@ -2820,244 +2820,161 @@ def last_committed_batch_id(table_path: str) -> int | None:
     return max(ids) if ids else None
 
 
-_SQL_TOKEN_RE = re.compile(
-    r"""\s*(?:
-      (?P<str>'(?:[^']|'')*')
-    | (?P<num>-?\d+(?:\.\d+)?(?:[eE][+-]?\d+)?)
-    | (?P<ident>[A-Za-z_][A-Za-z0-9_]*)
-    | (?P<op><>|!=|>=|<=|==|=|<|>)
-    | (?P<punct>[(),])
-    | (?P<arith>[%*/+\-.])
-    )""",
-    re.X,
+# Literal dataType names (Catalyst's JSON names) and column simpleStrings
+# of the types whose values and recorded stats order numerically
+_NUMERIC_TYPES = frozenset(
+    (
+        "byte", "tinyint", "short", "smallint", "integer", "int",
+        "long", "bigint", "float", "double",
+    )
 )
 
 
-def _sql_tokens(s: str) -> list | None:
-    """Tokenize an ANSI boolean predicate into (kind, value) pairs;
-    None when anything unrecognized appears (the caller then derives
-    no prune and relies on the residual filter alone)."""
-    out, pos = [], 0
-    while pos < len(s):
-        m = _SQL_TOKEN_RE.match(s, pos)
-        if m is None:
-            return None if s[pos:].strip() else out
-        pos = m.end()
-        for kind in ("str", "num", "ident", "op", "punct", "arith"):
-            v = m.group(kind)
+def _type_family(t: str) -> str | None:
+    """``numeric``, ``string``, ``date`` or ``timestamp``; None for a
+    type whose literals the stats comparison does not order."""
+    if t in _NUMERIC_TYPES or t.startswith("decimal"):
+        return "numeric"
+    return t if t in ("string", "date", "timestamp") else None
+
+
+def _column_types(table_path: str, manifest: dict) -> dict[str, str]:
+    """Each column's type (its ``simpleString``), read on the driver with
+    no Spark job: the newest commit's footer schema — the table's current
+    schema, which :func:`_check_append_schema` anchors on too — plus the
+    partition columns' pinned spec dtypes. A column the footer cannot
+    vouch for (:func:`_footer_spark_schema`) is absent, and a ``where``
+    conjunct on it derives nothing."""
+    commits = manifest.get("commits") or []
+    if not commits:
+        return {}
+    path = os.path.join(table_path, "data", commits[-1])
+    files = manifest.get("stats", {}).get(commits[-1])
+    if files:  # a partitioned commit's dir holds subdirs; its files are leaves
+        path = os.path.join(path, next(iter(files)))
+    schema = _footer_spark_schema([path])
+    types = (
+        {f.name: f.dataType.simpleString() for f in schema.fields}
+        if schema
+        else {}
+    )
+    for spec in manifest.get("specs", {}).values():
+        if isinstance(spec, dict):
+            types.update(spec)
+    return types
+
+
+# comparison node -> which bounds ``col op v`` sets, as (lo, hi); the
+# flipped ``v op col`` swaps them. Strict bounds relax to inclusive.
+_BOUND_OPS = {
+    "EqualTo": (True, True),
+    "GreaterThan": (True, False),
+    "GreaterThanOrEqual": (True, False),
+    "LessThan": (False, True),
+    "LessThanOrEqual": (False, True),
+}
+
+
+def _derive_where(
+    spark: SparkSession, where: str, col_types: dict[str, str]
+) -> tuple[list[tuple], dict[str, list]]:
+    """Mine a SQL predicate for file skipping: ``(triples, probe)``,
+    where ``triples`` are ``(col, lo, hi)`` manifest-stats prune ranges
+    and ``probe`` maps a column to the exact values its equality or IN
+    conjunct admits (the bloom probe's keys; the shortest list wins).
+
+    ``where`` is parsed once on the driver by the session's own parser
+    — the one the residual ``F.expr(where)`` filter runs, so a string
+    that fails here raises the ``ParseException`` the filter would —
+    and the tree comes back as one JSON node list. Only top-level
+    ``AND`` conjuncts (nested ``AND`` groups flattened) that compare one
+    unqualified column with literals derive: ``=``, ``<``, ``<=``,
+    ``>``, ``>=`` either way round (strict bounds relax to inclusive),
+    ``BETWEEN`` and ``IN`` (collapsed to [min, max] for the triple).
+    ``OR``, ``NOT``, ``<>``, ``IS [NOT] NULL``, ``LIKE``, arithmetic,
+    function calls, column-to-column and qualified names derive
+    nothing. A literal derives only when its type family (numeric,
+    string, date, timestamp) is the column's in ``col_types``, and it
+    is rendered as :func:`_json_stat` records that family's stats
+    (``str(date)``, ``str(datetime)``): a string or date literal
+    against a timestamp column would compare its text with
+    ``'2020-01-02 00:00:00'``-style stats and skip matching files.
+    Timestamp literals come back in the session time zone and stats
+    were collected in Python's, so both must be UTC (``get_spark`` pins
+    the session); other Python time zones are not handled.
+
+    Purely advisory: every range is a superset of its conjunct's rows
+    and the caller re-applies the whole predicate, so what derives can
+    change only the files opened, never the answer. No Spark job."""
+    import json  # noqa: PLC0415
+
+    parser = spark._jsparkSession.sessionState().sqlParser()
+    nodes = iter(json.loads(parser.parseExpression(where).toJSON()))
+
+    def tree():  # the JSON list is the tree in pre-order
+        node = next(nodes)
+        return node["class"].rsplit(".", 1)[1], node, [
+            tree() for _ in range(node["num-children"])
+        ]
+
+    def conjuncts(t):
+        return conjuncts(t[2][0]) + conjuncts(t[2][1]) if t[0] == "And" else [t]
+
+    def column(t):
+        name = t[1]["nameParts"][1:-1] if t[0] == "UnresolvedAttribute" else ""
+        return name if name and ", " not in name else None
+
+    def value(t, col):
+        kind, node, _ = t
+        fam = _type_family(node["dataType"]) if kind == "Literal" else None
+        if fam is None or fam != _type_family(col_types.get(col, "")):
+            return None
+        text = node["value"]
+        try:
+            if fam == "numeric":
+                try:
+                    return int(text)
+                except ValueError:
+                    return float(text)
+            if fam == "date":
+                return str(datetime.date.fromisoformat(text))
+            if fam == "timestamp":
+                return str(datetime.datetime.fromisoformat(text))
+        except ValueError:
+            return None  # e.g. a year Python cannot hold
+        return text
+
+    triples: list[tuple] = []
+    probe: dict[str, list] = {}
+    for kind, node, kids in conjuncts(tree()):
+        vals = None
+        if kind in _BOUND_OPS:
+            sets, col, lit = _BOUND_OPS[kind], column(kids[0]), kids[1]
+            if col is None:
+                sets, col, lit = sets[::-1], column(kids[1]), kids[0]
+            v = value(lit, col)
             if v is not None:
-                out.append((kind, v))
-                break
-    return out
-
-
-def _split_conjuncts(toks: list) -> list[list]:
-    """Split a token list on top-level ``AND`` — parenthesized groups
-    stay whole, and the ``AND`` inside a top-level ``BETWEEN .. AND ..``
-    belongs to the BETWEEN, not the conjunction."""
-    out, cur, depth, between_pending = [], [], 0, 0
-    for t in toks:
-        kind, v = t
-        if kind == "punct" and v == "(":
-            depth += 1
-        elif kind == "punct" and v == ")":
-            depth -= 1
-        elif kind == "ident" and depth == 0:
-            u = v.upper()
-            if u == "BETWEEN":
-                between_pending += 1
-            elif u == "AND":
-                if between_pending:
-                    between_pending -= 1
-                else:
-                    out.append(cur)
-                    cur = []
-                    continue
-        cur.append(t)
-    out.append(cur)
-    return out
-
-
-def _sql_literal(toks: list):
-    """Parse a leading literal; returns (python value, tokens consumed)
-    or None. ``DATE '...'`` / ``TIMESTAMP '...'`` yield the ISO string,
-    which orders lexicographically like the recorded stats do."""
-    if not toks:
-        return None
-    kind, v = toks[0]
-    if kind == "num":
-        f = float(v)
-        return (int(v) if f.is_integer() and "." not in v and "e" not in v.lower() else f, 1)
-    if kind == "str":
-        return (v[1:-1].replace("''", "'"), 1)
-    if (
-        kind == "ident"
-        and v.upper() in ("DATE", "TIMESTAMP")
-        and len(toks) > 1
-        and toks[1][0] == "str"
-    ):
-        return (toks[1][1][1:-1].replace("''", "'"), 2)
-    return None
-
-
-def _conjunct_triples(c: list) -> list[tuple]:
-    """Prune triples derivable from ONE conjunct — a simple
-    single-column range/equality/BETWEEN/IN comparison against
-    literals; anything else (OR, NOT, arithmetic, function calls, IS
-    NULL, subqueries) derives nothing and is handled by the residual
-    filter alone. Strict bounds relax to inclusive ones (file skipping
-    needs only a superset of the matching files)."""
-    # a fully-parenthesized group may itself be a conjunction
-    while (
-        len(c) >= 2
-        and c[0] == ("punct", "(")
-        and c[-1] == ("punct", ")")
-    ):
-        depth = 0
-        for i, t in enumerate(c):
-            if t == ("punct", "("):
-                depth += 1
-            elif t == ("punct", ")"):
-                depth -= 1
-                if depth == 0 and i < len(c) - 1:
-                    break  # the leading paren closes early: not a shell
-        else:
-            c = c[1:-1]
-            subs = _split_conjuncts(c)
-            if len(subs) > 1:
-                return [t for s in subs for t in _conjunct_triples(s)]
-            continue
-        break
-    if any(
-        k == "ident" and v.upper() in ("OR", "NOT", "IS", "LIKE", "RLIKE")
-        for k, v in c
-    ):
-        return []
-    # col op literal
-    if len(c) >= 3 and c[0][0] == "ident" and c[1][0] == "op":
-        lit = _sql_literal(c[2:])
-        if lit is not None and 2 + lit[1] == len(c):
-            col, op, v = c[0][1], c[1][1], lit[0]
-            if op in ("=", "=="):
-                return [(col, v, v)]
-            if op in (">=", ">"):
-                return [(col, v, None)]
-            if op in ("<=", "<"):
-                return [(col, None, v)]
-            return []
-    # literal op col (flipped)
-    lit = _sql_literal(c)
-    if (
-        lit is not None
-        and len(c) == lit[1] + 2
-        and c[lit[1]][0] == "op"
-        and c[lit[1] + 1][0] == "ident"
-    ):
-        v, op, col = lit[0], c[lit[1]][1], c[lit[1] + 1][1]
-        if op in ("=", "=="):
-            return [(col, v, v)]
-        if op in (">=", ">"):
-            return [(col, None, v)]
-        if op in ("<=", "<"):
-            return [(col, v, None)]
-        return []
-    # col BETWEEN lit AND lit
-    if (
-        len(c) >= 5
-        and c[0][0] == "ident"
-        and c[1][0] == "ident"
-        and c[1][1].upper() == "BETWEEN"
-    ):
-        lo = _sql_literal(c[2:])
-        if lo is not None:
-            i = 2 + lo[1]
-            if i < len(c) and c[i][0] == "ident" and c[i][1].upper() == "AND":
-                hi = _sql_literal(c[i + 1 :])
-                if hi is not None and i + 1 + hi[1] == len(c):
-                    return [(c[0][1], lo[0], hi[0])]
-        return []
-    # col IN (lit, lit, ...)
-    if (
-        len(c) >= 5
-        and c[0][0] == "ident"
-        and c[1][0] == "ident"
-        and c[1][1].upper() == "IN"
-        and c[2] == ("punct", "(")
-        and c[-1] == ("punct", ")")
-    ):
-        vals, i = [], 3
-        while i < len(c) - 1:
-            lit = _sql_literal(c[i:])
-            if lit is None:
-                return []
-            vals.append(lit[0])
-            i += lit[1]
-            if i < len(c) - 1:
-                if c[i] != ("punct", ","):
-                    return []
-                i += 1
-        kinds = {type(v) in (int, float) for v in vals}
-        if vals and len(kinds) == 1:
-            try:
-                return [(c[0][1], min(vals), max(vals))]
-            except TypeError:
-                return []
-    return []
-
-
-def _derive_in_values(where: str) -> dict[str, list]:
-    """The exact value lists of top-level ``col IN (lit, ...)``
-    conjuncts — the membership complement of ``_conjunct_triples``'
-    [min, max] collapse: a bloom probe wants the listed values
-    themselves (P9 ids-in probes), not their envelope. Same
-    conservative contract: a conjunct that doesn't match the shape
-    contributes nothing, and consumers only ever use the result to
-    SHRINK the files opened under the full residual filter."""
-    out: dict[str, list] = {}
-    for c in _split_conjuncts(_sql_tokens(where) or []):
-        if not (
-            len(c) >= 5
-            and c[0][0] == "ident"
-            and c[1][0] == "ident"
-            and c[1][1].upper() == "IN"
-            and c[2] == ("punct", "(")
-            and c[-1] == ("punct", ")")
+                triples.append((col, v if sets[0] else None, v if sets[1] else None))
+                vals = [v] if kind == "EqualTo" else None
+        elif (
+            kind == "UnresolvedFunction"
+            and node["nameParts"].lower() == "[between]"
+            and len(kids) == 3
         ):
-            continue
-        vals, i = [], 3
-        while i < len(c) - 1:
-            lit = _sql_literal(c[i:])
-            if lit is None:
-                vals = None
-                break
-            vals.append(lit[0])
-            i += lit[1]
-            if i < len(c) - 1:
-                if c[i] != ("punct", ","):
-                    vals = None
-                    break
-                i += 1
-        if vals:
-            col = c[0][1]
-            if col not in out or len(vals) < len(out[col]):
-                out[col] = vals
-    return out
-
-
-def _derive_prune_triples(where: str) -> list[tuple]:
-    """Derive manifest-stats prune ranges from a SQL predicate's
-    top-level conjuncts — the ergonomic path to file skipping: callers
-    state the query's own filter once (``read_versioned(...,
-    where=...)``) instead of hand-computing ``prune`` triples. Purely
-    advisory: every derived range is a SUPERSET condition of its
-    conjunct, the full predicate is always re-applied as a residual
-    filter, and a conjunct this parser does not understand simply
-    derives nothing — so the answer can never depend on what was
-    derived, only the set of files opened can."""
-    toks = _sql_tokens(where)
-    if not toks:
-        return []
-    return [t for c in _split_conjuncts(toks) for t in _conjunct_triples(c)]
+            col = column(kids[0])
+            lo, hi = value(kids[1], col), value(kids[2], col)
+            if lo is not None and hi is not None:
+                triples.append((col, lo, hi))
+                vals = [lo] if lo == hi else None
+        elif kind == "In":
+            col = column(kids[0])
+            vals = [value(k, col) for k in kids[1:]]
+            if None in vals:
+                continue
+            triples.append((col, min(vals), max(vals)))
+        if vals and (col not in probe or len(vals) < len(probe[col])):
+            probe[col] = vals
+    return triples, probe
 
 
 def read_versioned(
@@ -3070,7 +2987,6 @@ def read_versioned(
     as_of: float | None = None,
     where: str | None = None,
     _keep_files: dict | None = None,
-    _eq_probe: dict | None = None,
 ) -> DataFrame:
     """Read a versioned table at ``version`` (default: latest) — time
     travel is just resolving that version's manifest to its commit
@@ -3120,14 +3036,33 @@ def read_versioned(
     written under).
 
     ``where``: an ANSI boolean predicate applied as a filter AND mined
-    for prune ranges (:func:`_derive_prune_triples`) — simple
-    range/equality/BETWEEN/IN conjuncts on stats-tracked columns skip
-    files exactly as explicit ``prune`` triples do, without the caller
-    computing them. The full predicate always re-applies on the scan
-    (answer-invariance by construction: derivation only widens the set
-    of files opened, never the rows returned); non-derivable conjuncts
-    (OR, expressions, functions) just don't prune. The ergonomic path
-    to manifest file skipping at 100 TB: state the query's filter once.
+    for file skipping (:func:`_derive_where`), so callers state the
+    query's filter once instead of computing ``prune`` triples. The
+    session's own SQL parser reads it on the driver (no Spark job), and
+    top-level AND conjuncts comparing one column with literals (range,
+    equality, BETWEEN, IN) skip files exactly as explicit ``prune``
+    triples do; OR, NOT, ``<>``, IS NULL, LIKE, expressions, functions
+    and qualified names derive nothing. A conjunct derives only when its
+    literals' type family (numeric, string, date or timestamp) is the
+    column's, as the newest commit's footer records it: a string or date
+    literal against a timestamp column derives nothing, since its text
+    does not order like the recorded timestamp stats. Timestamp stats
+    and literals both render as UTC wall time (``get_spark`` pins the
+    session time zone; other Python time zones are not handled). The
+    full predicate always re-applies on the scan, so derivation only
+    changes the files opened, never the rows returned; a predicate that
+    fails to parse raises the ``ParseException`` the filter would.
+
+    Equality and IN conjuncts of ``where`` also probe the table's key
+    bloom when the bloom's columns are among them: a point lookup
+    (``k = N``) or an ids-in probe (``k IN (...)``) opens only the files
+    that can contain the listed keys — O(files containing the key) on a
+    scattered table where the min/max envelope skips nothing. Sound for
+    the same reason: the full predicate re-applies as the residual, and
+    blooms have no false negatives under the recorded convention. The
+    probe launches no Spark job: the literal keys' positions fold over
+    a local relation and the needed bloom words are read and tested on
+    the driver (:func:`_bloom_keep_files`).
 
     ``_keep_files`` (PRIVATE — tombstone pre-image recovery only):
     ``{commit_dir: {relative file, ...}}`` restricting listed commits
@@ -3135,52 +3070,8 @@ def read_versioned(
     commits read fully. Unlike ``prune``/``where`` this has NO residual
     filter, so it is only sound when the CALLER re-applies a row-level
     membership predicate — :func:`_tombstone_preimages`' key semi-join
-    over a no-false-negative bloom keep-set.
-
-    ``_eq_probe`` (PRIVATE — set by the ``where`` branch only):
-    ``{col: literal}`` equality conjuncts mined from ``where``. When
-    the table maintains a key bloom over a subset of these columns,
-    the POINT LOOKUP consults it and opens only the files that can
-    contain the probed key — S9-style existence probes become O(files
-    containing the key) on a scattered table where the min/max
-    envelope skips nothing. Sound for the same reason ``where``
-    derivation is: the full predicate re-applies as the residual, and
-    blooms have no false negatives under the recorded convention. The
-    probe launches no Spark job: the literal keys' positions fold over
-    a local relation and the needed bloom words are read and tested
-    on the driver (:func:`_bloom_keep_files`)."""
+    over a no-false-negative bloom keep-set."""
     import json
-
-    if where is not None:
-        derived = _derive_prune_triples(where)
-        if derived:
-            base = (
-                [tuple(p) for p in prune]
-                if isinstance(prune, list)
-                else [tuple(prune)] if prune is not None else []
-            )
-            prune = base + derived
-        eqs = {
-            c: [lo]
-            for c, lo, hi in (derived or [])
-            if lo is not None and lo == hi
-        }
-        for col, vals in _derive_in_values(where).items():
-            # a plain equality (1 value) always beats an IN list on
-            # the same column; both are sound supersets of the rows
-            eqs.setdefault(col, vals)
-        inner = read_versioned(
-            spark,
-            table_path,
-            version=version,
-            merge_schema=merge_schema,
-            prune=prune,
-            branch=branch,
-            as_of=as_of,
-            _keep_files=_keep_files,
-            _eq_probe=eqs or None,
-        )
-        return inner.filter(F.expr(where))
 
     versions = table_versions(table_path)
     if not versions:
@@ -3207,39 +3098,6 @@ def read_versioned(
     with open(os.path.join(_versions_dir(table_path), f"v{v}.json")) as f:
         manifest = json.load(f)
 
-    if _eq_probe and _keep_files is None:
-        bcfg = manifest.get("bloom")
-        if bcfg and set(bcfg["cols"]) <= set(_eq_probe):
-            import itertools
-
-            # the cross product across the key columns' value lists is
-            # a SUPERSET of the keys the predicate can match — sound,
-            # and small by construction (equality lists are length 1,
-            # IN lists are human-written); a blown cap degrades to the
-            # unpruned read
-            rows = list(
-                itertools.islice(
-                    itertools.product(
-                        *[_eq_probe[c] for c in bcfg["cols"]]
-                    ),
-                    257,
-                )
-            )
-            if 0 < len(rows) <= 256:
-                try:
-                    _keep_files = _bloom_keep_files(
-                        spark, table_path, manifest, rows
-                    )
-                except Exception:
-                    # a literal the declared dtype can't represent (or
-                    # any probe-side surprise) must degrade to an
-                    # unpruned read, never a failed one — the caller's
-                    # predicate still filters rows either way
-                    _keep_files = None
-
-    stats = manifest.get("stats", {})
-    specs = manifest.get("specs", {})
-
     # one (col, lo, hi) triple, or a LIST of triples ANDed together —
     # multi-column pruning is what multi-column Z-order stats are FOR
     # (a 2-d range probe on a z-ordered table should skip on both
@@ -3251,10 +3109,69 @@ def read_versioned(
             if isinstance(prune, list)
             else [tuple(prune)]
         )
+    probe = None
+    if where is not None:
+        triples, probe = _derive_where(
+            spark, where, _column_types(table_path, manifest)
+        )
+        if triples:
+            prunes = (prunes or []) + triples
+    df = _scan_manifest(
+        spark, table_path, manifest, merge_schema, prunes, _keep_files, probe
+    )
+    return df if where is None else df.filter(F.expr(where))
+
+
+def _scan_manifest(
+    spark: SparkSession,
+    table_path: str,
+    manifest: dict,
+    merge_schema: bool,
+    prunes: list[tuple] | None,
+    keep_files: dict | None,
+    eq_probe: dict | None,
+) -> DataFrame:
+    """The scan behind :func:`read_versioned` for one resolved manifest:
+    ``prunes`` are the ANDed ``(col, lo, hi)`` triples (None: no stats
+    pruning), ``keep_files`` the private ``_keep_files`` restriction,
+    and ``eq_probe`` (``{col: [value, ...]}``, from ``where``) the key
+    bloom probe, consulted only when ``keep_files`` is None."""
+    if eq_probe and keep_files is None:
+        bcfg = manifest.get("bloom")
+        if bcfg and set(bcfg["cols"]) <= set(eq_probe):
+            import itertools
+
+            # the cross product across the key columns' value lists is
+            # a SUPERSET of the keys the predicate can match — sound,
+            # and small by construction (equality lists are length 1,
+            # IN lists are human-written); a blown cap degrades to the
+            # unpruned read
+            rows = list(
+                itertools.islice(
+                    itertools.product(
+                        *[eq_probe[c] for c in bcfg["cols"]]
+                    ),
+                    257,
+                )
+            )
+            if 0 < len(rows) <= 256:
+                try:
+                    keep_files = _bloom_keep_files(
+                        spark, table_path, manifest, rows
+                    )
+                except Exception:
+                    # a literal the declared dtype can't represent (or
+                    # any probe-side surprise) must degrade to an
+                    # unpruned read, never a failed one — the caller's
+                    # predicate still filters rows either way
+                    keep_files = None
+
+    stats = manifest.get("stats", {})
+    specs = manifest.get("specs", {})
 
     def commit_paths(c: str) -> list[str]:
         d = os.path.join(table_path, "data", c)
-        bloom_keep = None if _keep_files is None else _keep_files.get(c)
+        bloom_keep = None if keep_files is None else keep_files.get(c)
         st = stats.get(c) if prunes is not None else None
         if st is None:
             if bloom_keep is None:
@@ -3340,7 +3257,7 @@ def read_versioned(
         return out
 
     deletes = manifest.get("deletes", [])
-    if not deletes and prune is None and not specs and _keep_files is None:
+    if not deletes and prunes is None and not specs and keep_files is None:
         return _read_store_parquet(
             spark,
             *[os.path.join(table_path, "data", c) for c in manifest["commits"]],

@@ -310,9 +310,10 @@ def m_multi_prune_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     range probe of a versioned table z-ordered on (o_custkey,
     o_orderkey) reads through ``read_versioned(where=...)`` — the
     predicate string is both the filter AND the prune source
-    (``_derive_prune_triples`` mines its BETWEEN conjuncts into
-    manifest-stats ranges), so callers never hand-compute prune
-    triples; the full predicate re-applies on the scan, making the
+    (``io._derive_where`` turns its BETWEEN conjuncts, read from
+    Spark's own parse tree, into manifest-stats ranges), so callers
+    never hand-compute prune triples; the full predicate re-applies on
+    the scan, making the
     derivation answer-invariant by construction. In-gate asserts that
     the 2-d ``where`` opens no more files than the x-only one and
     (when the layout has enough files to show it) strictly fewer than

@@ -12,7 +12,6 @@ from collections import Counter, defaultdict
 from pyspark.sql import functions as F
 
 from data_spark.queries.analytics4 import (
-    _CDC_MOD,
     _PPL_THRESHOLD,
     a_ks_two_sample,
     a_mann_whitney_u,

@@ -1133,7 +1133,7 @@ def test_read_versioned_where_derives_pruning(spark, tmp_path):
     derive nothing, and EVERY where= read answers exactly like the
     full-scan filter (the residual re-applies the whole predicate)."""
     from data_spark.io import (
-        _derive_prune_triples,
+        _derive_where,
         delete_versioned,
         read_versioned,
         write_versioned,
@@ -1167,7 +1167,7 @@ def test_read_versioned_where_derives_pruning(spark, tmp_path):
 
     # non-derivable predicate: derives nothing, answer still exact
     wn = "k % 10 = 3 OR s = '5'"
-    assert _derive_prune_triples(wn) == []
+    assert _derive_where(spark, wn, {"k": "bigint", "s": "string"}) == ([], {})
     nd = read_versioned(spark, table, where=wn)
     assert len(nd.inputFiles()) == n_full
     assert sorted(tuple(r) for r in nd.collect()) == sorted(
@@ -1193,12 +1193,69 @@ def test_read_versioned_where_derives_pruning(spark, tmp_path):
     )
 
 
-def test_derive_prune_triples_conservative(spark):
+def test_read_versioned_where_on_timestamps_matches_filter(spark, tmp_path):
+    """``where=`` on a timestamp stats column answers like the full-scan
+    filter. Stats hold ``str(datetime)`` ('2020-01-02 00:00:00'), so a
+    TIMESTAMP literal prunes in that rendering (fractional seconds
+    included), and a string or DATE literal compared with the column
+    derives nothing: its text orders before the stat of the same
+    instant, which skipped the file holding it."""
+    from data_spark.io import read_versioned, write_versioned
+
+    table = str(tmp_path / "ts")
+    hours = spark.range(48).select(
+        F.col("id").alias("k"),
+        F.timestamp_seconds(F.lit(1577836800) + F.col("id") * 3600).alias("ts"),
+    )
+    write_versioned(
+        hours.repartitionByRange(4, "ts").sortWithinPartitions("ts"),
+        table,
+        "overwrite",
+        stats_cols=["ts"],
+    )
+    full = read_versioned(spark, table)
+    assert len(full.inputFiles()) == 4
+    for w, n in (
+        ("ts <= TIMESTAMP '2020-01-02'", 25),
+        ("ts <= '2020-01-02'", 25),
+        ("ts <= DATE '2020-01-02'", 25),
+        ("ts <= TIMESTAMP '2020-01-01'", 1),
+        ("ts <= TIMESTAMP '2020-01-01 05:00:00.5'", 6),
+        ("ts >= TIMESTAMP '2020-01-01 11:00:00.0'", 37),
+    ):
+        got = sorted(r["k"] for r in read_versioned(spark, table, where=w).collect())
+        want = sorted(r["k"] for r in full.filter(F.expr(w)).collect())
+        assert got == want and len(want) == n, w
+    # the TIMESTAMP literal still prunes: only the first file holds hour 0
+    one = read_versioned(spark, table, where="ts <= TIMESTAMP '2020-01-01'")
+    assert len(one.inputFiles()) == 1
+
+
+def test_derive_where_conservative(spark):
     """The predicate miner only ever derives SUPERSET ranges: strict
     bounds relax to inclusive, IN collapses to [min, max], flipped
     literal-first comparisons normalize, and anything it cannot prove
-    (OR, NOT, IS NULL, arithmetic, functions, LIKE) derives nothing."""
-    from data_spark.io import _derive_prune_triples as d
+    (OR, NOT, IS NULL, arithmetic, functions, LIKE, qualified names,
+    column-to-column, a literal of another type family) derives
+    nothing. The probe side keeps IN lists exact."""
+    from pyspark.errors import ParseException
+
+    from data_spark.io import _derive_where
+
+    types = {
+        "a": "int",
+        "b": "string",
+        "c": "bigint",
+        "d": "date",
+        "ts": "timestamp",
+        "my col": "double",
+    }
+
+    def d(where):
+        return _derive_where(spark, where, types)[0]
+
+    def probe(where):
+        return _derive_where(spark, where, types)[1]
 
     assert d("a > 5") == [("a", 5, None)]
     assert d("a < 5") == [("a", None, 5)]
@@ -1209,6 +1266,20 @@ def test_derive_prune_triples_conservative(spark):
     assert d("ts >= TIMESTAMP '2020-01-01 00:00:00'") == [
         ("ts", "2020-01-01 00:00:00", None)
     ]
+    assert d("a > -5") == [("a", -5, None)]
+    assert d("d = DATE '2020-01-02'") == [("d", "2020-01-02", "2020-01-02")]
+    assert d("ts < TIMESTAMP '2020-01-01 05:00:00.5'") == [
+        ("ts", None, "2020-01-01 05:00:00.500000")
+    ]
+    assert d("`my col` <= 2.5") == [("my col", None, 2.5)]
+    assert d("(a > 1 AND c < 2) AND b = 'z'") == [
+        ("a", 1, None),
+        ("c", None, 2),
+        ("b", "z", "z"),
+    ]
+    assert probe("a IN (9, 3, 5)") == {"a": [9, 3, 5]}
+    assert probe("a IN (9, 3) AND a = 3 AND c IN (1, 2)") == {"a": [3], "c": [1, 2]}
+    assert probe("a BETWEEN 1 AND 3 AND a > 0") == {}
     for opaque in (
         "a > 5 OR b > 5",
         "NOT (a > 5)",
@@ -1218,5 +1289,15 @@ def test_derive_prune_triples_conservative(spark):
         "a LIKE 'x%'",
         "a <> 5",
         "a IN (1, 'x')",
+        "NOT (a BETWEEN 1 AND 3)",
+        "t.a = 3",
+        "a = b",
+        "b < 2",
+        "ts <= '2020-01-02'",
+        "ts <= DATE '2020-01-02'",
+        "zz = 3",
     ):
         assert d(opaque) == [], opaque
+        assert probe(opaque) == {}, opaque
+    with pytest.raises(ParseException):
+        _derive_where(spark, "a >", types)

@@ -9,7 +9,6 @@ from __future__ import annotations
 import datetime
 import os
 
-import pytest
 from pyspark.sql import functions as F
 
 from data_spark.io import (

@@ -8,7 +8,7 @@ import pyspark.sql.functions as F
 
 from data_spark.fec.master import build_contributions_master
 from data_spark.fec.views import contributions_elastic
-from data_spark.graph import contribution_graph, upsert_edges, upsert_nodes
+from data_spark.graph import contribution_graph, upsert_nodes
 from data_spark.graph.tables import anti_pattern_scan
 from tests.fec_fixtures import write_fixtures
 

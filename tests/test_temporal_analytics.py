@@ -11,7 +11,6 @@ import pyspark.sql.functions as F
 import pytest
 
 from data_spark.queries.analytics import (
-    _MH_BANDS,
     _spark_signatures,
     a_mode_per_group,
     d_minhash_band_pairs,
